@@ -19,6 +19,11 @@ Streaming-native equivalents:
 State-store sizing at 100 TB: the windowed aggregate keys state by
 (window, cell); watermarking bounds state to (delay / window) windows per
 cell. Session state is bounded by active incidents only.
+
+``kmv_distinct_state`` and ``cms_heavy_state`` stay Python state
+functions on purpose: Spark's native ``theta_sketch_agg`` and
+``count_min_sketch`` use other hashes, so they cannot reproduce the md5
+estimators that the batch-parity tests pin bit-exact.
 """
 
 from __future__ import annotations
@@ -119,67 +124,21 @@ def session_incidents(
     )
 
 
-INCREMENTAL_MAX_SCHEMA = (
-    "cell_x int, cell_y int, max_value double, n_obs long, last_ts timestamp"
-)
-_STATE_SCHEMA = "max_value double, n_obs long, last_ts_us long"
-
-
-def incremental_max_state(
-    stream: DataFrame,
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
-    """§2.10 custom stateful operator — the reference's max-FRP composite
+def incremental_max_state(stream: DataFrame) -> DataFrame:
+    """§2.10 stateful operator — the reference's max-FRP composite
     recomputed-from-scratch each run (DataDownloader_SNPP_VIIRS_V1.py:155)
     as *incremental* per-cell state: each micro-batch folds its rows into
-    the running (max, count) per cell and emits the updated row.
+    the running (max, count, last event time) per cell and, in ``update``
+    output mode, emits the updated row of every touched cell.
 
-    ``applyInPandasWithState``: state lives in the state store keyed by
-    cell; Arrow batches in/out. Pass ``idle_timeout_ms`` to expire idle
-    cells via a processing-time timeout (bounds state at 100 TB) — note
-    that pending timeouts keep the trigger loop active, so synchronous
-    test harnesses using ``processAllAvailable`` should leave it None."""
-    import pandas as pd
-
-    timeout_conf = (
-        "ProcessingTimeTimeout" if idle_timeout_ms else "NoTimeout"
-    )
-
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            mx, n, last = state.get
-            state.remove()
-        else:
-            mx, n, last = state.get if state.exists else (None, 0, 0)
-            for pdf in pdfs:
-                vals = pdf["value"].dropna()
-                if len(vals):
-                    batch_max = float(vals.max())
-                    mx = batch_max if mx is None else max(mx, batch_max)
-                    n += int(len(vals))
-                # pandas 2 reads TimestampType as datetime64[us] — the
-                # int64 view is already microseconds
-                ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").max()
-                last = max(last, int(ts_us))
-            state.update((mx, n, last))
-            if idle_timeout_ms:
-                state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "cell_x": [key[0]],
-                "cell_y": [key[1]],
-                "max_value": [mx],
-                "n_obs": [n],
-                "last_ts": [pd.Timestamp(last, unit="us")],
-            }
-        )
-
-    return stream.groupBy("cell_x", "cell_y").applyInPandasWithState(
-        update,
-        outputStructType=INCREMENTAL_MAX_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout_conf,
+    A native streaming aggregate: the state store holds one aggregation
+    row per cell, so state is bounded by the fixed cell grid, never by
+    stream length. ``n_obs`` counts non-null values; ``last_ts`` is the
+    latest event time including rows whose value is NULL."""
+    return stream.groupBy("cell_x", "cell_y").agg(
+        F.max("value").alias("max_value"),
+        F.count("value").alias("n_obs"),
+        F.max("ts").alias("last_ts"),
     )
 
 
@@ -325,6 +284,19 @@ def correlate_streams(
     )
 
 
+def _uncommitted_batch_target(
+    batch_df: DataFrame, out_dir: str, batch_id: int
+) -> str | None:
+    """``out_dir/batch_id=<id>``, or None when its ``_SUCCESS`` marker
+    already exists (the batch is committed; see
+    :func:`idempotent_batch_writer`)."""
+    target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
+    spark = batch_df.sparkSession
+    marker = spark._jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
+    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+    return None if fs.exists(marker) else target
+
+
 def idempotent_batch_writer(out_dir: str):
     """Exactly-once file sink for ``foreachBatch``: each micro-batch
     lands in ``out_dir/batch_id=<id>/`` and a batch directory that
@@ -348,14 +320,9 @@ def idempotent_batch_writer(out_dir: str):
     Returns the callback to pass to ``writeStream.foreachBatch``."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
-        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(marker):
-            return
-        batch_df.write.mode("overwrite").parquet(target)
+        target = _uncommitted_batch_target(batch_df, out_dir, batch_id)
+        if target is not None:
+            batch_df.write.mode("overwrite").parquet(target)
 
     return write
 
@@ -407,13 +374,10 @@ def ingest_dedup_stream(
     src = stream_from_dir(spark, in_dir, DOCS_STREAM_SCHEMA)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
-        jvm = s._jvm
-        marker = jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
-        fs = marker.getFileSystem(s._jsc.hadoopConfiguration())
-        if fs.exists(marker):
+        target = _uncommitted_batch_target(batch_df, out_dir, batch_id)
+        if target is None:
             return
+        s = batch_df.sparkSession
         matches = minhash_index_probe(
             s,
             index_path,

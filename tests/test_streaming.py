@@ -122,8 +122,10 @@ def test_session_incidents_merge_and_close(spark, stream_dirs):
 
 
 def test_incremental_max_state(spark, stream_dirs):
-    """The custom stateful operator folds successive micro-batches into
-    per-cell running (max, count) instead of recomputing from scratch."""
+    """The stateful operator folds successive micro-batches into per-cell
+    running (max, count, last event time) instead of recomputing from
+    scratch: NULL values are not counted, an all-NULL cell emits a NULL
+    max, and a late (earlier) event time never moves ``last_ts`` back."""
     from gee_datapipeline_spark.streaming.jobs import incremental_max_state
 
     src, ckpt = stream_dirs
@@ -152,8 +154,53 @@ def test_incremental_max_state(spark, stream_dirs):
             key=lambda r: r.n_obs,
         )
         assert (latest.max_value, latest.n_obs) == (30.0, 3)
+        assert latest.last_ts == datetime(2024, 1, 1, 0, 10)
+        # batch 3: (1,1) gets an out-of-order event; (2,2) only NULL
+        # values; (1,2) a value plus a later NULL-valued row
+        _write_batch(
+            spark,
+            src,
+            [
+                (datetime(2024, 1, 1, 0, 2), 1, 1, 25.0),
+                (datetime(2024, 1, 1, 0, 20), 2, 2, None),
+                (datetime(2024, 1, 1, 0, 15), 2, 2, None),
+                (datetime(2024, 1, 1, 0, 5), 1, 2, 7.0),
+                (datetime(2024, 1, 1, 0, 40), 1, 2, None),
+            ],
+            3,
+        )
+        q.processAllAvailable()
+        final = {}
+        for r in spark.sql("SELECT * FROM inc_max").collect():
+            k = (r.cell_x, r.cell_y)
+            if k not in final or r.n_obs > final[k].n_obs:
+                final[k] = r
+        got = {
+            k: (r.max_value, r.n_obs, r.last_ts) for k, r in final.items()
+        }
+        assert got == {
+            (1, 1): (30.0, 4, datetime(2024, 1, 1, 0, 10)),
+            (2, 2): (None, 0, datetime(2024, 1, 1, 0, 20)),
+            (1, 2): (7.0, 1, datetime(2024, 1, 1, 0, 40)),
+        }
     finally:
         q.stop()
+
+
+def test_incremental_max_state_is_native_aggregate(spark, stream_dirs):
+    """The per-cell fold stays a native streaming aggregate: no Python
+    state function (``applyInPandasWithState``) in the analyzed plan."""
+    from gee_datapipeline_spark.streaming.jobs import incremental_max_state
+
+    src, _ = stream_dirs
+    plan = (
+        incremental_max_state(stream_from_dir(spark, src + "/*"))
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+    )
+    assert "Aggregate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_checkpoint_recovery_no_duplicates(spark, stream_dirs):
