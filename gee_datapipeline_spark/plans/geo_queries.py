@@ -19,6 +19,8 @@ Oracle notes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,8 +51,10 @@ from ..sources.geojson import read_geojson
 from ..sources.synthetic import DELHI_BBOX
 from .registry import Query, register
 
-# Materialize at import so the oracle's read_parquet targets exist even if
-# the driver runs DuckDB before (or without) the Spark side.
+# Materialize at import so the synthetic fixtures the oracles read exist
+# even if the driver runs DuckDB before (or without) the Spark side. The
+# real-file twin (motorway_points) is written only where its source
+# GeoJSON exists; see _geo_proximity_roads_real.
 ensure_geo_fixtures()
 
 _PX = fixture_path("pixels")
@@ -1137,7 +1141,15 @@ def _geo_proximity_roads_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     polyline form covered by ``geo_proximity_roads``. Spark parses the
     original GeoJSON through ``sources.geojson``; the oracle reads a
     plain-Python-parsed parquet twin — two independent parsers of the
-    same 2,332-feature file differentially checked."""
+    same 2,332-feature file differentially checked.
+
+    Runs only where the reference export ``REAL_MOTORWAY_GEOJSON``
+    exists; elsewhere it raises ``FileNotFoundError`` before building a
+    plan (its oracle's parquet twin is not written either)."""
+    if not os.path.exists(REAL_MOTORWAY_GEOJSON):
+        raise FileNotFoundError(
+            f"reference data absent: {REAL_MOTORWAY_GEOJSON}"
+        )
     px = _pixels(spark).filter(F.col("value").isNotNull())
     roads = read_geojson(spark, REAL_MOTORWAY_GEOJSON, source="motorway")
     near = proximity_join(
@@ -1199,7 +1211,6 @@ def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB. Equality simultaneously gates the streaming plumbing, the
     replay tolerance, and the cell bucketing (no dropped border
     pairs)."""
-    import os
     import shutil
     import tempfile
 

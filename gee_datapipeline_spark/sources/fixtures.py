@@ -18,6 +18,7 @@ materialized even before any Spark work starts.
 from __future__ import annotations
 
 import json
+import os
 from pathlib import Path
 
 import pyarrow as pa
@@ -610,15 +611,21 @@ def _manifest() -> dict:
 
 
 def ensure_geo_fixtures(base: Path | None = None) -> Path:
-    """Write the fixture parquet files if absent or stale; return the dir."""
+    """Write the fixture parquet files if absent or stale; return the dir.
+
+    The real-file twin ``motorway_points`` is optional: it is written
+    (and required for freshness) only where ``REAL_MOTORWAY_GEOJSON``
+    exists, so every synthetic fixture materializes without it."""
     base = FIXTURES_DIR if base is None else Path(base)
     manifest_path = base / "MANIFEST.json"
     wanted = _manifest()
+    has_motorway = os.path.exists(REAL_MOTORWAY_GEOJSON)
     names = ("pixels", "regions", "thresholds", "amenities", "media",
              "dhash_media", "raster_pixels", "raster_utm_pixels",
              "raster_deflate_pixels", "raster_multiband_pixels",
-             "road_vertices", "motorway_points", "seam_road_vertices",
-             "seam_pixels")
+             "road_vertices", "seam_road_vertices", "seam_pixels")
+    if has_motorway:
+        names += ("motorway_points",)
     extra = ("points.csv", "logs.jsonl", "roads.geojson",
              "seam_roads.geojson")
     if manifest_path.exists() and all(
@@ -709,10 +716,11 @@ def ensure_geo_fixtures(base: Path | None = None) -> Path:
                        _SEAM_PIXELS_ARROW),
         base / "seam_pixels.parquet",
     )
-    pq.write_table(
-        _rows_to_table(_real_motorway_points(), _REAL_POINTS_ARROW),
-        base / "motorway_points.parquet",
-    )
+    if has_motorway:
+        pq.write_table(
+            _rows_to_table(_real_motorway_points(), _REAL_POINTS_ARROW),
+            base / "motorway_points.parquet",
+        )
     _write_delimited(base)
     manifest_path.write_text(json.dumps(wanted, indent=2))
     return base

@@ -25,8 +25,17 @@ sys.path.insert(
 import bench  # noqa: E402
 
 
+def _committed_cpus() -> int:
+    """Core count recorded in the committed BENCH_LOCAL.json. The loader
+    refuses captures from any other core count, so the tests below ask
+    for the one the committed captures were taken at, not this host's."""
+    here = os.path.dirname(os.path.abspath(bench.__file__))
+    with open(os.path.join(here, bench.LOCAL_RESULT)) as fh:
+        return json.load(fh)["cpus"]
+
+
 def test_baseline_loader_returns_nonempty_queries():
-    base = bench.latest_bench_baseline()
+    base = bench.latest_bench_baseline(cpus=_committed_cpus())
     assert base is not None, "no usable bench baseline in the repo"
     name, data = base
     assert isinstance(data.get("queries"), dict) and data["queries"], (
@@ -50,7 +59,7 @@ def test_baseline_loader_skips_truncated_captures():
         data = json.load(fh)
     if isinstance(data.get("queries"), dict) and data["queries"]:
         pytest.skip("BENCH_r04.json is not truncated after all")
-    name, _ = bench.latest_bench_baseline()
+    name, _ = bench.latest_bench_baseline(cpus=_committed_cpus())
     assert name != "BENCH_r04.json"
 
 
@@ -69,7 +78,7 @@ def test_local_result_preferred_once_written():
     local = os.path.join(here, bench.LOCAL_RESULT)
     if not os.path.exists(local):
         pytest.skip("BENCH_LOCAL.json not written yet this checkout")
-    name, data = bench.latest_bench_baseline()
+    name, data = bench.latest_bench_baseline(cpus=_committed_cpus())
     assert name == bench.LOCAL_RESULT
     assert data["queries"]
 

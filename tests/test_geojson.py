@@ -68,3 +68,62 @@ def test_read_geojson_flattens(spark, geojson_file):
     # exact geometry retained for downstream consumers
     coords = json.loads(poly.props["__coordinates"])
     assert coords[0][0] == [76.9, 28.4]
+
+
+def test_geo_fixtures_written_without_motorway_twin(tmp_path, monkeypatch):
+    """The real OSM motorway export is an optional input: where it is
+    absent every synthetic fixture and the manifest are still written
+    (no twin); once it appears, the next call writes the twin from it
+    even though the manifest already matches. No Spark session."""
+    import pyarrow.parquet as pq
+
+    from gee_datapipeline_spark.sources import fixtures
+
+    src = tmp_path / "motorway.geojson"
+    base = tmp_path / "fixtures"
+    monkeypatch.setattr(fixtures, "REAL_MOTORWAY_GEOJSON", str(src))
+
+    assert fixtures.ensure_geo_fixtures(base=base) == base
+    written = {p.name for p in base.iterdir()}
+    assert written == {
+        "MANIFEST.json", "amenities.parquet", "dhash_media.parquet",
+        "logs.jsonl", "media.parquet", "pixels.parquet", "points.csv",
+        "raster_deflate_pixels.parquet", "raster_multiband_pixels.parquet",
+        "raster_pixels.parquet", "raster_utm_pixels.parquet", "rasters",
+        "rasters_deflate", "rasters_multiband", "rasters_utm",
+        "regions.parquet", "road_vertices.parquet", "roads.geojson",
+        "seam_pixels.parquet", "seam_road_vertices.parquet",
+        "seam_roads.geojson", "thresholds.parquet",
+    }
+    assert json.loads((base / "MANIFEST.json").read_text()) == (
+        fixtures._manifest()
+    )
+
+    src.write_text(json.dumps({
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature", "id": "way/1", "properties": {},
+             "geometry": {"type": "Point", "coordinates": [77.1, 28.6]}},
+            {"type": "Feature", "properties": {"@id": "way/2"},
+             "geometry": {"type": "Point", "coordinates": [77.25, 28.5]}},
+        ],
+    }))
+    fixtures.ensure_geo_fixtures(base=base)
+    twin = pq.read_table(base / "motorway_points.parquet").to_pylist()
+    assert twin == [
+        {"feature_id": "way/1", "lon": 77.1, "lat": 28.6},
+        {"feature_id": "way/2", "lon": 77.25, "lat": 28.5},
+    ]
+
+
+def test_real_motorway_query_refuses_when_reference_absent(
+    tmp_path, monkeypatch
+):
+    """geo_proximity_roads_real names the missing file before it plans
+    anything (no Spark session is touched)."""
+    from gee_datapipeline_spark.plans import geo_queries
+
+    missing = str(tmp_path / "motorway.geojson")
+    monkeypatch.setattr(geo_queries, "REAL_MOTORWAY_GEOJSON", missing)
+    with pytest.raises(FileNotFoundError, match="reference data absent"):
+        geo_queries._geo_proximity_roads_real(None, "")
