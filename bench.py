@@ -1,515 +1,6 @@
-#!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Host CPU telemetry (steal, user, idle, iowait, load) over a timed region."""
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"<name>": <sec>, ...}, "sf": <float>}
-
-Each query is forced end-to-end with the noop sink (full computation,
-zero driver-side materialization cost), timed after a session warm-up so
-JVM startup isn't attributed to the first query.
-"""
-
-from __future__ import annotations
-
-import json
 import os
-import re
-import sys
-import time
-from collections import Counter
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from gee_datapipeline_spark.session import (  # noqa: E402
-    DEFAULT_CPUS,
-    get_spark,
-    release_scratch,
-)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Representative slice of the catalog: the flagship aggregate, each join
-# family, windows/sessions, and the LLM-pipeline scale paths.
-HEADLINE = [
-    "pricing_summary",
-    "star_join_topk",
-    "interval_join_monthly",
-    "asof_clicks_to_errors",
-    "big_orders",
-    "promo_share",
-    "proximity_pairs",
-    "mean_composite",
-    "max_composite",
-    "minmax_normalize",
-    "topk_per_group",
-    "grid_resample",
-    "rollup_report",
-    "session_windows",
-    "date_spine_gaps",
-    "dedup_exact",
-    "text_quality",
-    "lang_id_heuristic",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "ann_bruteforce",
-    "ann_lsh",
-    "ann_ivf",
-    "embedding_centroids",
-    "geo_flagship_v1",
-    "geo_proximity_amenities",
-    "selective_revenue",
-    "regional_revenue",
-    "cube_report",
-    "grouping_sets_report",
-    "conditional_agg",
-    "above_nation_avg",
-    "ntile_quartiles",
-    "moving_average",
-    "tfidf_top_terms",
-    "ngram_jaccard_pairs",
-    "multimodal_image_features",
-    "multimodal_decode_real",
-    "audio_decode_real",
-    "raster_ingest_tif",
-    # r3 additions: TPC-H completion, batch assembly, event analytics
-    "shipping_priority",
-    "returned_items",
-    "volume_shipping",
-    "customer_distribution",
-    "sequence_packing",
-    "mixture_sampling",
-    "shard_assignment",
-    "funnel_conversion",
-    "retention_cohorts",
-    "weekly_active_users",
-    "scd2_user_state",
-    "cms_heavy_hitters",
-    "token_budget_head",
-    "corpus_checksum",
-    "incremental_revenue",
-    "pagerank_trade_network",
-    "hopping_window_load",
-    "sql_surface_report",
-    "key_skew_profile",
-    "contract_audit",
-    # r4 additions: amortized-IVF training gate, UTM reprojection,
-    # TPC-H Q11 analog, real Y4M frame extraction
-    "ann_ivf_train",
-    "crs_utm_grid",
-    "supplier_stock_value",
-    "multimodal_frames_real",
-    # r4 perf-sweep graduates: exact all-pairs via block gram-matrix
-    # screen + decimal re-score, SemDeDup, and the HLL accuracy gate —
-    # all rebuilt this round, kept visible here round-over-round.
-    "embedding_near_dup",
-    "semantic_dedup",
-    "approx_distinct_profile",
-    # r4 scale-path variants: calendar-bucketized interval join (hash
-    # probe vs nested-loop), DF-capped exact Jaccard (adversarial guard)
-    "interval_join_bucketized",
-    "ngram_jaccard_capped",
-    # r4 ingestion-pipeline completions: new-batch index probe,
-    # boilerplate block removal, cluster-level split assignment,
-    # quality-based canonical selection, and the full curation
-    # pipeline (quality ∩ exact-dedup ∩ near-dup canonical) as one plan
-    "minhash_incremental",
-    "boilerplate_removal",
-    "leakage_safe_split",
-    "cluster_representative",
-    "curation_pipeline_e2e",
-    # r4 late additions: per-series linear gap-fill (satellite
-    # time-series repair) and adjacency-intersection triangle counting
-    "gapfill_interpolate",
-    "triangle_count",
-    # perceptual image dedup (real PNG decode -> dHash -> hash-groupBy)
-    "image_dhash_dedup",
-    # token-weighted quality quantiles (integer cumulative-weight windows)
-    "token_weighted_quality",
-    # BM25 ranked retrieval (one corpus-pass postings agg, broadcast probes)
-    "bm25_topk",
-    # PQ ADC search: codes-only corpus pass + broadcast lookup tables
-    "ann_pq",
-    "knn_join_ivf",
-    "linear_model_normal_eq",
-    "kmv_distinct_overlap",
-    # Dunning G² keyness: one (lang,term) agg + vocab-sized term join
-    "term_keyness",
-    # water-filling budget cap: one per-source agg + analytic water line
-    "source_token_waterfill",
-    # doc-level cap application: broadcast alloc + per-source window
-    "waterfill_apply",
-    # Zipf exponent: corpus term agg + TakeOrdered head + decimal OLS
-    "zipf_slope",
-    # MOSS winnowing: window-min fingerprint sampling, one sort, no join
-    "winnowing_fingerprints",
-    # PCA principal axis: one corpus-pass scatter agg + tiny power steps
-    "embedding_pca_power",
-    # PPJoin prefix filter: candidates from rarest-token prefixes only
-    "set_similarity_prefix_join",
-    # unigram KL drift per source: one tokenize pass, term-keyed join
-    "source_kl_divergence",
-    # sweep-line peak concurrency: day-bounded running-sum windows
-    "concurrency_profile",
-    # data-selection family: bigram-LM perplexity buckets (broadcast LM),
-    # DSIR hashed importance weights (broadcast ratio table), and
-    # RRF hybrid retrieval fusion (k-bounded rank windows)
-    "lm_perplexity_buckets",
-    "dsir_importance_weights",
-    "hybrid_rrf_topk",
-    # shuffle-free co-located join through matching bucketBy layouts
-    # (first run pays the layout; later runs amortize it — both visible)
-    "bucketed_join_revenue",
-    # synchronous weighted LPA: 3 unrolled rounds, int64-keyed shuffles
-    "label_propagation",
-    # broadcast Bloom bitmap prefilters the fact before the exact join
-    "bloom_prefilter_revenue",
-    # two-snapshot diff folded from one conditional-agg fact scan
-    "snapshot_diff",
-    # A-ES weighted draw: one scan, k-bounded TakeOrderedAndProject
-    "weighted_sample_wor",
-    # Hampel MAD screen: broadcast percentile tables, fact never shuffles
-    "mad_outliers",
-    # per-nation Gini: decimal-exact rank identity, one window pass
-    "gini_concentration",
-    # U-shaped multi-touch credit over journey-sized window partitions
-    "attribution_position",
-    # top session paths: session agg + k-bounded TakeOrderedAndProject
-    "top_paths",
-    # MI(lang; source): one cell-table agg, decimal term accumulation
-    "lang_source_mi",
-    # all-pairs audience Jaccard from one per-user bitmask agg
-    "audience_overlap",
-    # pairwise two-proportion z-tests on a tiny broadcast rate grid
-    "ab_test_zscores",
-    # Benford first-digit screen: one scan to a 9-row histogram
-    "benford_screen",
-    # audience growth: first-day keying + day-sized running sum
-    "cumulative_unique_users",
-    # text-format interop: day-1 events through Spark 4 native XML
-    "xml_roundtrip",
-    # r5 additions: conic + equal-area reprojection closing the
-    # arbitrary-src.crs gap (portable-SQL chains, codegen, no Python)
-    "crs_lcc_grid",
-    "crs_sinu_grid",
-    # projected-raster ingest: GeoKey parse + inverse-Kruger in the UDTF
-    "raster_ingest_utm_tif",
-    # hashed linear quality filter: broadcast model artifact, one agg
-    "quality_classifier_score",
-    # segment-sharded d-gap postings: bounded collects, two keyed aggs
-    "inverted_index_postings",
-    # r6 late additions: exact decimal-quantized entropy fold, and the
-    # deterministic eps-DP histogram release (one corpus fold each)
-    "lexical_diversity",
-    "dp_noisy_counts",
-    # r7 additions: exact dissolve (any-member clip + slab-sweep union
-    # area) and the zlib compressibility histogram (Arrow-batched UDF
-    # over the full documents scan — a real 100 TB scale path)
-    "geo_clip_dissolved",
-    "geo_region_union_area",
-    "compression_ratio_quality",
-    # r8 additions: point-to-LINE proximity (segment-distance bucketed
-    # join over road polylines), the real-OSM-file point variant, and
-    # multi-band GeoTIFF ingest (file_per_band=False export shape)
-    "geo_proximity_roads",
-    "geo_proximity_roads_real",
-    "geo_proximity_seam",
-    "raster_ingest_multiband_tif",
-    # NRT road proximity: 3 micro-batches (one a replay) through the
-    # stream-static broadcast join + complete-mode max/min
-    "streaming_road_enrich",
-    # multi-band stacked export -> band de-interleaved re-ingest
-    "geotiff_multiband_roundtrip",
-    # skew-salted shuffles: hot-key join (8-way dim replication) and
-    # exact salted count-distinct — both bit-identical to the unsalted
-    # plans by oracle
-    "skew_salted_join",
-    "skew_salted_distinct",
-    # r9 Zipf skew A/B: same oracle, plain vs salted placement of the
-    # per-row fingerprint work (SCALE.md "Skew A/B" — measured ratio)
-    "skew_zipf_enrich_plain",
-    "skew_zipf_enrich_salted",
-    # maximal duplicated-span extraction (gaps-and-islands over dup
-    # windows) and the Poisson-bootstrap CI (x32 narrow inflation, one
-    # map-side-combinable aggregate)
-    "span_dedup_extract",
-    "bootstrap_ci",
-    # shot-boundary detection over real Y4M-decoded frames
-    "video_scene_cuts",
-    # sequential recursions via per-group applyInPandas: Page's CUSUM
-    # and Holt smoothing with walk-forward backtest
-    "cusum_drift",
-    "holt_forecast",
-]
-
-
-LOCAL_RESULT = "BENCH_LOCAL.json"
-
-# Known deltas (annotated, not flagged — but BOUNDED, r9 ADVICE): an
-# annotation is adjudication evidence for a specific measured level,
-# not a permanent waiver. Each entry carries:
-#   kind            "host-noise"  — re-measured solo/quiet, plan
-#                                   untouched, swing tracks the VM's
-#                                   vCPU-steal / session state;
-#                   "plan-cost"   — a deliberate plan change (usually
-#                                   a correctness fix or a
-#                                   scale-over-local trade) whose cost
-#                                   was measured and accepted;
-#                   "oracle-cost" — extra work carried so the DuckDB
-#                                   value-hash oracle can reproduce
-#                                   the result bit-for-bit (md5 hash
-#                                   families, decimal formatting).
-#   adjudicated_sec the highest measurement the cited evidence
-#                   explains. A new measurement beyond this bound by
-#                   the normal flag margin (>1.2x AND >0.5s over it)
-#                   is NOT covered: it re-flags and must be
-#                   re-adjudicated with fresh evidence or fixed.
-#   note            the evidence trail (what was re-measured, when,
-#                   and why the level is explained).
-EXPECTED_DELTAS = {
-    # ---- oracle-cost: work carried so the DuckDB value-hash oracle
-    # reproduces results bit-for-bit ----
-    "minhash_lsh_pairs": {
-        "kind": "oracle-cost",
-        "adjudicated_sec": 2.497,
-        "note": "DuckDB-reproducible md5perm hash family for the full "
-        "value-hash oracle (~1.3-1.7x vs xxhash64)",
-    },
-    "simhash_pairs": {
-        "kind": "oracle-cost",
-        "adjudicated_sec": 4.081,
-        "note": "DuckDB-reproducible md5hex hash family for the full value-hash "
-        "oracle",
-    },
-    # ---- plan-cost: deliberate plan changes whose cost was measured
-    # and accepted. The r11 block is the cross-run artifact-cache
-    # removal (VERDICT r10 item 1): these queries used to serve a
-    # fingerprint-keyed parquet artifact built by a previous PROCESS;
-    # they now rebuild it inside their own timed plan, every run. The
-    # train/serve amortization story stays benched via ann_ivf_train /
-    # pq_codes; a real deployment persists these as model artifacts. ----
-    "pagerank_trade_network": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 4.52,
-        "note": "adjudicated r7->r8: intentional scale-over-local trade. r8 "
-        "solo A/B at sf0.1: broadcast-|V| power steps (ce08c4f) min "
-        "4.52s vs shuffle-join min 4.23s — the broadcast costs ~7% at "
-        "local[32] but removes every per-iteration edge shuffle, the "
-        "correct plan when the edge list is fact-sized (100 TB). "
-        "Re-validated at sf1.0 in r11: broadcast arm 9.90s vs "
-        "shuffle-join 11.32s (SCALE.md decade table)",
-    },
-    "ann_ivf": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 5.6,
-        "note": "r11 cache removal: the IVF quantizer trains in-plan every run "
-        "(exact-mode md5 seeds + decimal Lloyd means for the "
-        "training-inclusive oracle). Solo quiet-host 4.80s = train "
-        "~3.2s + serve ~1.6s; the removed fingerprint scan is why the "
-        "old cached-serve level (1.64s) is not comparable",
-    },
-    "knn_join_ivf": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 2.7,
-        "note": "r11 cache removal: trains the same in-plan quantizer as "
-        "ann_ivf. Solo quiet-host 2.24s vs 1.28s cached-serve",
-    },
-    "ann_pq": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 3.0,
-        "note": "r11 cache removal: the N*M PQ code table is encoded in-plan "
-        "(corpus x K decimal subvector argmin). Solo quiet-host 2.57s "
-        "vs 0.83s cached-serve; the removed fingerprint .first() was "
-        "itself a full corpus pass per serve",
-    },
-    "leakage_safe_split": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 7.8,
-        "note": "r11 cache removal: the dedup-cluster table (shingle + "
-        "banding + large/small-star CC rounds) is computed in-plan per "
-        "run. Solo quiet-host 6.71s vs 0.34s cached-serve; the CC "
-        "rounds are ~1.3s each of fixed job cost at sf0.1 (observe()- "
-        "merged stats and lazy checkpoints both tried and measured "
-        "flat-to-worse, numbers in operators/graph.py)",
-    },
-    "cluster_representative": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 7.9,
-        "note": "r11 cache removal: same in-plan CC pipeline as "
-        "leakage_safe_split (solo quiet-host 6.79s vs 0.81s "
-        "cached-serve)",
-    },
-    "curation_pipeline_e2e": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 7.5,
-        "note": "r11 cache removal: same in-plan CC pipeline as "
-        "leakage_safe_split (solo quiet-host 6.44s vs 0.97s "
-        "cached-serve)",
-    },
-    "set_similarity_prefix_join": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 1.95,
-        "note": "r11 scale-over-local trade (VERDICT r10 item 6): the corpus "
-        "spread reverted in r10 is KEPT on sf1.0 evidence — 6.87s -> "
-        "5.88s (0.86x) one decade up; costs ~+0.6s in the sf0.1 "
-        "full-bench context (1.224 -> 1.813 quiet-host capture). Same "
-        "class as bm25_topk",
-    },
-    "bm25_topk": {
-        "kind": "plan-cost",
-        "adjudicated_sec": 3.0,
-        "note": "r11 scale-over-local trade (VERDICT r10 item 6): the corpus "
-        "spread reverted in r10 is KEPT on sf1.0 evidence — 4.77s -> "
-        "2.69s (0.56x) one decade up, vs +1.1s at sf0.1 (interleaved "
-        "1.49 -> 2.56). The guard no-ops on production layouts with "
-        "real splits, so the local cost is the fixture's, not the "
-        "design's",
-    },
-    # ---- host-noise: recurring contention amplifiers whose plan
-    # shapes are pinned by tests (plan_snapshot / dedicated plan
-    # tests), so a real structural regression cannot hide behind these
-    # entries; the time-level evidence is per-entry ----
-    "triangle_count": {
-        "kind": "host-noise",
-        "adjudicated_sec": 3.27,
-        "note": "measured-noisy (collect_set + checkpoint heavy): solo "
-        "re-measures with identical post-r6 code span 2.04s-3.27s "
-        "across sessions; the r6 change was a coalesce on the final "
-        "1-row aggregate (no per-row work)",
-    },
-    "bootstrap_ci": {
-        "kind": "host-noise",
-        "adjudicated_sec": 2.89,
-        "note": "r9 host-window noise: 4.94s in run 2 only (2.348s baseline, "
-        "run 1 = 2.798s, solo 2.890s); the md5-hoist plan shape is "
-        "pinned by test_bootstrap_ci_plan_runs_one_md5_per_row, so a "
-        "real regression of the r8 class cannot hide here",
-    },
-    "approx_distinct_profile": {
-        "kind": "host-noise",
-        "adjudicated_sec": 2.203,
-        "note": "proven noise class: r5 full-bench runs measured 1.568s and "
-        "2.203s with identical code (solo fresh-session 1.757s; r4 "
-        "driver run 2.043s); plan untouched since the r4 "
-        "HLL/count-distinct split",
-    },
-    "minhash_incremental": {
-        "kind": "host-noise",
-        "adjudicated_sec": 4.15,
-        "note": "adjudicated r8->r9->r10: the 32-permutation signature agg is "
-        "memory-bandwidth-bound and amplifies host contention (r9 "
-        "interleaved solo A/B spanned 3.16-4.15s on an identical plan "
-        "while the control ran 1.1-1.6x over its own baseline); r10 "
-        "quiet-host solo 1.97-2.15s. Plan snapshot-pinned",
-    },
-    "ann_ivf_train": {
-        "kind": "host-noise",
-        "adjudicated_sec": 1.9,
-        "note": "k-means train is the memory-bandwidth-amplification class "
-        "like minhash_incremental (r9 noise event 3.07s in one run; "
-        "r11 solo quiet-host 1.51s)",
-    },
-    "streaming_road_enrich": {
-        "kind": "host-noise",
-        "adjudicated_sec": 7.25,
-        "note": "streaming amplifies host slowdown through fixed per-trigger "
-        "overheads; r8+r10 solo bands 6.39-7.25s at steal <0.3%. r11 "
-        "coalesces the two live months into one trigger "
-        "(maxFilesPerTrigger=2, the replay stays its own trigger) — "
-        "5.0-5.9s -> 4.5-4.8s measured — so the bound predates the "
-        "improvement and is conservative headroom for contended "
-        "windows",
-    },
-    # ---- the r10 driver run's 32-core inversion family (VERDICT r10
-    # item 2): re-measured solo in r11 on a moderately loaded host at
-    # BOTH core counts — no inversion reproduces (8c/32c ratios 0.91-
-    # 1.5 across the family; e.g. lang_id 0.73s @32c vs 0.67s @8c).
-    # The r10 driver flags (lang_id 5.07s etc.) were contended-window
-    # amplification, not plan structure; the spread width floor
-    # (catalog.py, 32 KB/task) additionally caps the tiny-task wave
-    # count that amplified them. Bounds below are what today's
-    # evidence explains — a future pathological window re-flags, and
-    # should. ----
-    "lang_id_heuristic": {
-        "kind": "host-noise",
-        "adjudicated_sec": 0.9,
-        "note": "r11 re-adjudication: solo 0.73s @32c / 0.67s @8c (no "
-        "inversion); spread width now floored at 18 tasks for the "
-        "594KB documents source. The r10 driver's 5.07s does not "
-        "reproduce and is deliberately NOT covered",
-    },
-    "ann_lsh": {
-        "kind": "host-noise",
-        "adjudicated_sec": 1.84,
-        "note": "r9 noise event 2.04s in one run; r11 re-measure 1.69s @32c / "
-        "1.73s @8c (no inversion, plan untouched since r2)",
-    },
-}
-
-
-
-def baseline_write_allowed(run_cpus: int, existing: dict | None) -> bool:
-    """Whether a run at ``run_cpus`` may replace ``existing`` as
-    BENCH_LOCAL.json. An existing baseline is only replaceable by a run
-    at its own recorded core count; a legacy baseline with no recorded
-    cpus stays replaceable (and the replacement stamps it)."""
-    return (
-        existing is None
-        or existing.get("cpus") is None
-        or int(existing["cpus"]) == int(run_cpus)
-    )
-
-
-def latest_bench_baseline(cpus: int | None = None) -> tuple[str, dict] | None:
-    """Baseline for the round-over-round regression gate.
-
-    Prefers the repo-tracked BENCH_LOCAL.json (the FULL result this
-    script writes after every run) over the driver's BENCH_r{N}.json
-    captures: the driver truncates bench stdout to a 2000-char tail
-    with ``parsed: null`` once the query map outgrows the capture
-    (observed in BENCH_r04.json), which would silently disarm the gate
-    — comparing every query against nothing. The driver files remain
-    the fallback for a fresh checkout that has never run bench.
-
-    r11 (VERDICT r10 item 3): a capture that records a ``cpus`` count
-    different from this run's is NOT a usable baseline — the driver
-    also benches at a reduced core count to measure scaling, and its
-    8-core capture once clobbered the 32-core baseline, after which
-    every per-query drift ratio compared apples to oranges. A capture
-    with no recorded cpus (pre-r11) is accepted for compatibility."""
-    import glob
-
-    if cpus is None:
-        cpus = DEFAULT_CPUS
-    here = os.path.dirname(os.path.abspath(__file__))
-    local = os.path.join(here, LOCAL_RESULT)
-    candidates = [local] + sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: -int(re.search(r"_r(\d+)", p).group(1)),
-    )
-    for path in candidates:
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        # The driver records bench stdout under a "parsed" wrapper
-        # (carrying its own top-level "cpus" from the run env).
-        wrapper_cpus = data.get("cpus")
-        if "queries" not in data and isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        rec_cpus = data.get("cpus", wrapper_cpus)
-        if rec_cpus is not None and int(rec_cpus) != int(cpus):
-            continue
-        if isinstance(data.get("queries"), dict) and data["queries"]:
-            return os.path.basename(path), data
-    return None
-
-
-def parse_sf(path: str) -> float:
-    m = re.search(r"sf([0-9.]+)", path)
-    return float(m.group(1)) if m else -1.0
 
 
 def _cpu_sample() -> list[int] | None:
@@ -548,300 +39,3 @@ def host_telemetry(before: list[int] | None) -> dict:
     except OSError:
         pass
     return out
-
-
-def delta_covered(
-    name: str, sec: float | None, table: dict | None = None
-) -> bool:
-    """Whether an EXPECTED_DELTAS annotation covers a measurement.
-
-    r9 ADVICE closed the unbounded-waiver hole: an annotation is
-    evidence for the level it adjudicated, not a blank cheque. A
-    measurement is covered only while it stays within the normal flag
-    margin of the adjudicated level — beyond BOTH the 1.2x ratio and
-    the 0.5s absolute jitter floor, the annotation is stale and the
-    query re-flags for fresh adjudication."""
-    table = EXPECTED_DELTAS if table is None else table
-    entry = table.get(name)
-    if entry is None:
-        return False
-    if sec is None:
-        # No measurement to judge against (e.g. the query was dropped
-        # from HEADLINE); membership alone is all we can check.
-        return True
-    adj = entry["adjudicated_sec"]
-    return not (sec > 1.2 * adj and sec - adj > 0.5)
-
-
-def committed_bench_result(repo_dir: str | None = None) -> dict | None:
-    """The HEAD-committed BENCH_LOCAL.json, or None if never committed.
-
-    Provenance matters (r9 judge item 1): the external driver re-runs
-    bench.py AFTER the round ends and its capture lands in the working
-    tree — r9's landed at steal 3.42% with 7 fresh host-noise flags
-    that nobody could possibly have adjudicated post-round. The
-    adjudication contract therefore binds the COMMITTED artifact (the
-    last state a round owner signed off on), never whatever a later
-    uncommitted run left on disk."""
-    import subprocess
-
-    here = repo_dir or os.path.dirname(os.path.abspath(__file__))
-    try:
-        proc = subprocess.run(
-            ["git", "-C", here, "show", f"HEAD:{LOCAL_RESULT}"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if proc.returncode != 0:
-            return None
-        return json.loads(proc.stdout)
-    except (OSError, ValueError, subprocess.SubprocessError):
-        return None
-
-
-def unadjudicated_flags(repo_dir: str | None = None) -> dict[str, str]:
-    """Flags in the last ADJUDICATABLE bench capture that nobody
-    adjudicated. Rounds 7 and 8 both ended with fresh ``regressions``
-    sitting silently in the tree, so this is checked structurally —
-    at every bench startup (warning; hard failure under
-    SPARK_GRAFT_BENCH_STRICT=1) and by the test suite
-    (tests/test_bench_baseline.py).
-
-    Two provenance/staleness rules, both from the r9 verdict:
-    - The artifact judged is ``git show HEAD:BENCH_LOCAL.json`` — the
-      committed state. An uncommitted capture (the driver's post-round
-      run) cannot redden the suite; COMMITTING such a capture
-      unannotated still does. Fallback to the on-disk file only when
-      the artifact has never been committed (fresh mid-round checkout).
-    - Entries the capture filed under ``expected_deltas`` are
-      re-checked against their annotation's adjudicated bound: a stale
-      annotation must not keep covering ever-larger regressions."""
-    prev = committed_bench_result(repo_dir)
-    if prev is None:
-        here = repo_dir or os.path.dirname(os.path.abspath(__file__))
-        try:
-            with open(os.path.join(here, LOCAL_RESULT)) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            return {}
-    qsec = prev.get("queries") or {}
-    stale: dict[str, str] = {}
-    for name, note in (prev.get("regressions") or {}).items():
-        if not delta_covered(name, qsec.get(name)):
-            stale[name] = note
-    for name, note in (prev.get("expected_deltas") or {}).items():
-        if not delta_covered(name, qsec.get(name)):
-            stale[name] = f"{note} [EXCEEDS its adjudicated bound]"
-    return stale
-
-
-def main() -> None:
-    stale = unadjudicated_flags()
-    if stale:
-        print(
-            f"UNADJUDICATED flags from the previous run: {stale} — "
-            "fix the query or annotate it in EXPECTED_DELTAS",
-            file=sys.stderr,
-        )
-        if os.environ.get("SPARK_GRAFT_BENCH_STRICT") == "1":
-            sys.exit(1)
-    spark = get_spark("bench", extra_conf={
-        "spark.ui.showConsoleProgress": "false",
-    })
-    from gee_datapipeline_spark.plans import queries
-
-    qs = queries()
-    # Warm up outside the timed region: parquet footers for every table,
-    # whole-stage codegen, and the Python/Arrow worker pool — one-time
-    # session costs that a long-lived cluster amortizes away and that
-    # would otherwise be misattributed to whichever query runs first.
-    from pyspark.sql import functions as F
-
-    from gee_datapipeline_spark.catalog import TABLES, load_table
-
-    # count() alone is served by parquet metadata (count pushdown) and
-    # never touches data pages — hash(*) forces a real full-column scan
-    # so the OS page cache + Arrow readers are warm before timing.
-    for t in TABLES:
-        load_table(spark, SF_DIR, t).selectExpr(
-            "sum(hash(*)) AS h"
-        ).write.mode("overwrite").format("noop").save()
-
-    # lambda form: immune to `from __future__ import annotations`
-    _warm = F.pandas_udf(lambda s: s, "double")
-    spark.range(1000).select(
-        _warm(F.col("id").cast("double")).alias("v")
-    ).write.mode("overwrite").format("noop").save()
-    qs["collection_size"](spark, SF_DIR).write.mode("overwrite").format(
-        "noop"
-    ).save()
-
-    # Best-of-3 per query: later runs report steady-state execution
-    # (plan compilation cached, JIT warm) while the min guards against
-    # GC pauses and the intermittent vCPU-steal noise this VM shows.
-    # Optional subset filter (SPARK_GRAFT_BENCH_ONLY="a,b,c") for scale
-    # spot-runs (SCALE.md sf1.0 decade experiment) — order preserved.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    names = HEADLINE
-    if only:
-        wanted = {w.strip() for w in only.split(",") if w.strip()}
-        names = [n for n in HEADLINE if n in wanted]
-    timings: dict[str, float] = {}
-    cpu_before = _cpu_sample()
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            qs[name](spark, SF_DIR).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-            # Free the finished run's localCheckpoint scratch (outside
-            # the timed region) so dead blocks from iterative queries
-            # never tax a later run — the long-lived-session hygiene a
-            # real cluster job would do.
-            release_scratch(spark)
-        timings[name] = round(best, 3)
-
-    total = round(sum(timings.values()), 3)
-
-    # Round-over-round regression gate: any query >20% over its time in
-    # the latest recorded BENCH_r{N}.json is annotated; >2× fails the
-    # run under SPARK_GRAFT_BENCH_STRICT=1. New queries have no
-    # baseline and are skipped. A regression without an annotation is
-    # indistinguishable from an unnoticed one, so the reporting
-    # threshold is deliberately much tighter than the failure one.
-    regressions: dict[str, str] = {}
-    expected = EXPECTED_DELTAS
-    expected_deltas: dict[str, str] = {}
-    baseline = latest_bench_baseline()
-    drift: dict[str, object] = {}
-    if baseline is not None:
-        base_name, base = baseline
-        # Host-drift indicator: the median new/old ratio across every
-        # common query. Real code regressions are per-query (one ratio
-        # spikes, the median stays ~1.0); a slower host this boot (vCPU
-        # steal, thermal cap, different machine) shifts the WHOLE
-        # distribution. Reporting the median lets a reader separate
-        # "this query regressed" from "this box is 1.4x slower today"
-        # without re-deriving it from two files.
-        ratios = sorted(
-            sec / base["queries"][name]
-            for name, sec in timings.items()
-            if base.get("queries", {}).get(name, 0) > 0.05
-        )
-        if ratios:
-            drift = {
-                "baseline": base_name,
-                "n_common": len(ratios),
-                "median_ratio_vs_baseline": round(
-                    ratios[len(ratios) // 2], 3
-                ),
-            }
-        for name, sec in timings.items():
-            prev = base.get("queries", {}).get(name)
-            # Absolute floor on top of the 20% ratio: sub-half-second
-            # swings on small queries are within this VM's measured
-            # run-to-run jitter (±0.2-0.4s under vCPU steal) and would
-            # flood the report with noise; every real regression caught
-            # so far (2.13→19s, 0.4→4.3s) clears 0.5s by an order of
-            # magnitude.
-            if prev and prev > 0 and sec > 1.2 * prev and sec - prev > 0.5:
-                note = f"{prev}s -> {sec}s vs {base_name}"
-                if delta_covered(name, sec):
-                    e = expected[name]
-                    expected_deltas[name] = (
-                        f"{note} [{e['kind']}; adjudicated "
-                        f"{e['adjudicated_sec']}s] ({e['note']})"
-                    )
-                elif name in expected:
-                    e = expected[name]
-                    regressions[name] = (
-                        f"{note} — EXCEEDS the adjudicated bound "
-                        f"{e['adjudicated_sec']}s ({e['kind']}): the "
-                        "annotation is stale evidence; re-adjudicate "
-                        "with a fresh re-measure or fix the plan"
-                    )
-                else:
-                    regressions[name] = note
-
-    result = {
-        "metric": "headline_queries_total_wall_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": parse_sf(SF_DIR),
-        # Provenance (r11, VERDICT r10 item 3): the core count this run
-        # executed at. A baseline is only comparable at the same count —
-        # the loader and the write guard both enforce it.
-        "cpus": DEFAULT_CPUS,
-        # Protocol, so rounds aren't cross-compared blindly:
-        # warmed session, N runs per query, min reported.
-        # (BENCH_r01 used footer-only warmup + best-of-2.)
-        "runs": 3,
-        "stat": "min",
-        "warmup": "table footers + pandas_udf pool + codegen",
-        "regressions": regressions,
-        "expected_deltas": expected_deltas,
-        # The annotation ledger, quantified (r9 item 6): how many
-        # waivers exist per kind, and how many actually applied to
-        # this run — a growing noise ledger is a visible number here,
-        # not something a reader reconstructs from prose.
-        "expected_delta_kinds": {
-            "ledger": dict(
-                Counter(e["kind"] for e in EXPECTED_DELTAS.values())
-            ),
-            "applied_this_run": dict(
-                Counter(
-                    EXPECTED_DELTAS[n]["kind"] for n in expected_deltas
-                )
-            ),
-        },
-        "drift": drift,
-        "host": host_telemetry(cpu_before),
-    }
-    # Persist the FULL result (the driver's BENCH_r{N}.json capture
-    # truncates) so the next run always has a real baseline. Written
-    # AFTER the baseline was read, never instead of reading it. Only
-    # at the reference SF — a sf0.01 smoke run must not become the
-    # baseline sf0.1 runs are judged against.
-    # ... and never from a subset run, which would clobber the full
-    # baseline with a partial query map.
-    # ... and never from a run at a different core count than the
-    # baseline on disk (r11, VERDICT r10 item 3: the driver's 8-core
-    # scaling run overwrote — and then committed over — the 32-core
-    # baseline; an existing baseline can only be replaced by a run at
-    # its own recorded cpus).
-    existing = None
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, LOCAL_RESULT)) as fh:
-            existing = json.load(fh)
-    except (OSError, ValueError):
-        pass
-    cpus_ok = baseline_write_allowed(DEFAULT_CPUS, existing)
-    if result["sf"] == 0.1 and not only and cpus_ok:
-        with open(os.path.join(here, LOCAL_RESULT), "w") as fh:
-            json.dump(result, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-    elif not cpus_ok:
-        print(
-            f"NOT updating {LOCAL_RESULT}: this run used cpus="
-            f"{DEFAULT_CPUS} but the baseline records cpus="
-            f"{existing.get('cpus')} — a scaling run must not become "
-            "the drift baseline",
-            file=sys.stderr,
-        )
-    print(json.dumps(result))
-    if regressions:
-        print(f"REGRESSIONS >20%: {regressions}", file=sys.stderr)
-        # Under STRICT any unannotated flag fails the run (not just
-        # the >2x class): a round must not be able to end with a
-        # fresh regression recorded but unadjudicated.
-        if os.environ.get("SPARK_GRAFT_BENCH_STRICT") == "1":
-            sys.exit(1)
-
-
-if __name__ == "__main__":
-    main()

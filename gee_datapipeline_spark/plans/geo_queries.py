@@ -1199,6 +1199,11 @@ register(
 )
 
 
+# Shuffle partitions for the streaming aggregate's dimension-bounded
+# state (see _road_enrich_stream).
+_STREAM_STATE_PARTITIONS = 4
+
+
 def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming point-to-LINE proximity with a FULL replay-vs-batch
     oracle (the streaming_dedup pattern): the pixel fixture arrives as
@@ -1211,6 +1216,12 @@ def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB. Equality simultaneously gates the streaming plumbing, the
     replay tolerance, and the cell bucketing (no dropped border
     pairs)."""
+    return _road_enrich_stream(spark)[0]
+
+
+def _road_enrich_stream(spark: SparkSession) -> tuple[DataFrame, list]:
+    """Run the three-batch stream of ``streaming_road_enrich``; return its
+    final table and the query's ``recentProgress``."""
     import shutil
     import tempfile
 
@@ -1244,17 +1255,22 @@ def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replay batch a byte-for-byte COPY of month 1's directory —
         # truer to at-least-once redelivery than re-running the write
         # (the redelivered file is verbatim identical), and one fewer
-        # Spark job. Batch order is still enforced by write/copy order
-        # (and maxFilesPerTrigger=1 gives one micro-batch per file
-        # regardless of timestamps).
+        # Spark job. The file source takes files oldest-first, and the
+        # copy keeps month 1's mtime, so the replay is stamped strictly
+        # later than both live months: it must not ride their trigger.
         for i, m in enumerate(batches[:-1]):
             px.filter(F.col("m") == m).drop("m").coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(src, f"b{i}"))
-        shutil.copytree(
-            os.path.join(src, "b0"),
-            os.path.join(src, f"b{len(batches) - 1}"),
+        live = [os.path.join(src, f"b{i}") for i in range(len(batches) - 1)]
+        replay = os.path.join(src, f"b{len(batches) - 1}")
+        shutil.copytree(live[0], replay)
+        later = 1 + max(
+            os.path.getmtime(os.path.join(d, f))
+            for d in live for f in os.listdir(d)
         )
+        for f in os.listdir(replay):
+            os.utime(os.path.join(replay, f), (later, later))
         schema = T._parse_datatype_string(
             "dataset string, lon double, lat double, value double"
         )
@@ -1272,20 +1288,17 @@ def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Values are identical under any partitioning (max/min aggs).
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
+            "spark.sql.shuffle.partitions", str(_STREAM_STATE_PARTITIONS)
         )
         try:
-            # Trigger coalescing (r11, VERDICT r10 item 5): the two
-            # live months ride ONE trigger (maxFilesPerTrigger = 2, and
-            # the files are oldest-first, so the pair precedes the
-            # replay), the verbatim redelivery is its own SECOND
-            # trigger. Per-trigger fixed cost (plan + broadcast build +
-            # state txns + complete-mode sink rewrite) measured
-            # ~1.4 s here, so 3 → 2 triggers cuts the query ~25% while
-            # the at-least-once contract still gets a real redelivery
-            # trigger after a committed batch. Final values identical
-            # (complete-mode max/min over the same multiset).
+            # Trigger coalescing: the two live months ride ONE trigger
+            # (maxFilesPerTrigger = 2, and the replay's later mtime puts
+            # it after the pair), the verbatim redelivery is its own
+            # SECOND trigger after a committed batch. Per-trigger fixed
+            # cost (plan + broadcast build + state txns + complete-mode
+            # sink rewrite) measured ~1.4 s here, so 3 → 2 triggers cuts
+            # the query ~25%. Final values identical (complete-mode
+            # max/min over the same multiset).
             q = run_to_memory(
                 enrich_stream_roads(
                     stream_from_dir(
@@ -1303,10 +1316,11 @@ def _streaming_road_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         try:
             q.processAllAvailable()
+            progress = q.recentProgress
         finally:
             q.stop()
         rows = spark.table(name).collect()
-        return spark.createDataFrame(rows, spark.table(name).schema)
+        return spark.createDataFrame(rows, spark.table(name).schema), progress
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

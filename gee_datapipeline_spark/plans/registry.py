@@ -8,10 +8,9 @@ identically on both sides and every float aggregate goes through
 ``functions.stable`` to be bit-reproducible across engines and
 partitionings.
 
-Queries tagged ``oracle=None`` are the genuinely non-SQL-expressible ones
-(MinHash-LSH banding, SimHash, LSH-bucketed ANN, streaming state); they
-get the driver's weaker rows-only check plus dedicated unit tests in
-``tests/``.
+Every query carries an oracle: :func:`register` refuses one without. The
+approximate operators (MinHash-LSH banding, SimHash, LSH-bucketed ANN,
+streaming state) also have dedicated unit tests in ``tests/``.
 """
 
 from __future__ import annotations
@@ -28,7 +27,7 @@ SparkBuilder = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     spark: SparkBuilder
-    oracle: str | None  # DuckDB SQL over pre-registered views, or None
+    oracle: str  # DuckDB SQL over pre-registered views
     tags: tuple[str, ...] = field(default=())
     doc: str = ""
 
@@ -39,6 +38,8 @@ QUERIES: dict[str, Query] = {}
 def register(q: Query) -> Query:
     if q.name in QUERIES:
         raise ValueError(f"duplicate query name {q.name!r}")
+    if not q.oracle:
+        raise ValueError(f"query {q.name!r} has no oracle")
     QUERIES[q.name] = q
     return q
 
@@ -50,9 +51,9 @@ def queries() -> dict[str, SparkBuilder]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """The driver-facing ``oracle_sql()`` mapping (SQL-expressible only)."""
+    """The driver-facing ``oracle_sql()`` mapping."""
     _load_all()
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}
 
 
 _LOADED = False

@@ -19,15 +19,14 @@ import pandas as pd
 import pytest
 
 from gee_datapipeline_spark.plans import QUERIES
-from gee_datapipeline_spark.plans.registry import _load_all
+from gee_datapipeline_spark.plans.registry import Query, _load_all, register
 
 from conftest import SF_SMOKE, gate_reference_queries, register_duck_views
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", SF_SMOKE)
 
 _load_all()
-ORACLE_NAMES = sorted(n for n, q in QUERIES.items() if q.oracle is not None)
-ROWS_ONLY_NAMES = sorted(n for n, q in QUERIES.items() if q.oracle is None)
+ORACLE_NAMES = sorted(QUERIES)
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -102,12 +101,13 @@ def test_query_matches_oracle(name, spark, duck):
         )
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_query_runs(name, spark):
-    q = QUERIES[name]
-    df = q.spark(spark, SF_DIR)
-    assert df.count() >= 0
-    assert len(df.schema) > 0
+def test_register_refuses_query_without_oracle():
+    for oracle in (None, ""):
+        q = Query(name="oracle_less_probe", spark=lambda spark, sf: None,
+                  oracle=oracle)
+        with pytest.raises(ValueError, match="has no oracle"):
+            register(q)
+    assert "oracle_less_probe" not in QUERIES
 
 
 def test_entry_smoke(spark):

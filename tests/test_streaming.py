@@ -851,3 +851,19 @@ def test_enrich_stream_roads_replay_equals_batch(spark, tmp_path):
     }
     assert got == want
     assert len(got) > 0
+
+
+def test_streaming_road_enrich_redelivery_is_its_own_trigger(spark):
+    """The catalog's ``streaming_road_enrich`` replays month 1 after both
+    live months: the two live months share the first trigger and the
+    redelivery arrives alone in a later one, after a committed batch."""
+    from gee_datapipeline_spark.plans import geo_queries
+
+    _, progress = geo_queries._road_enrich_stream(spark)
+    px = geo_queries._pixels(spark).filter(F.col("value").isNotNull())
+    per_month = {
+        r["m"]: r["count"]
+        for r in px.groupBy(F.month("date").alias("m")).count().collect()
+    }
+    rows = [p.numInputRows for p in progress if p.numInputRows > 0]
+    assert rows == [sum(per_month.values()), per_month[min(per_month)]]
