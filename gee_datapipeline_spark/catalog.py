@@ -172,10 +172,6 @@ def _parse_bytes(v: str) -> int:
         return 134217728
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for the SQL entry points)."""
     for t in TABLES:

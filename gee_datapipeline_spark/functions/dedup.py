@@ -6,15 +6,16 @@ Why these exist (LLM-data-pipeline surface): exact dedup
 pairwise path is quadratic in candidate density. MinHash-LSH reduces it to
 an equi-join on band buckets — the only shape that survives 100 TB:
 
-    shingle → k minhashes (per-row, no shuffle)
+    shingle rows → k minhashes (one min hash-aggregate per doc)
     → b bands of r rows each (k = b·r)
     → explode bands → equi-join on (band_id, band_hash)
     → estimate Jaccard from signature agreement, threshold.
 
-Everything is Catalyst higher-order functions over the shingle array —
-signatures are computed per row with zero shuffles; the only shuffle is
-the band-bucket join, which AQE skew-handles. ``xxhash64(seed, value)``
-supplies the k hash families (JVM-side, deterministic).
+Signatures are a codegen'd min hash-aggregate over (doc_id, shingle)
+rows with map-side partial aggregation (:func:`minhash_signatures_df`);
+the other shuffle is the band-bucket join, which AQE skew-handles.
+``xxhash64(seed, value)`` supplies the k hash families (JVM-side,
+deterministic).
 
 SimHash: 64-bit fingerprint whose Hamming distance approximates cosine
 distance over the token multiset; banded by 16-bit chunks for the same
@@ -38,27 +39,6 @@ DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8  # 8 bands x 4 rows = 32 hashes
 
 
-def minhash_signature(
-    shingle_arr: Column, num_hashes: int = DEFAULT_NUM_HASHES
-) -> Column:
-    """k-permutation MinHash signature of a string-array column.
-
-    ``sig[i] = min over shingles of xxhash64(i, shingle)`` — one pass per
-    row. Empty shingle sets yield an all-NULL signature.
-
-    PERFORMANCE: nested higher-order functions are interpreted (no
-    whole-stage codegen), so this per-row form is only for small inputs
-    (tests, ad-hoc). The pipeline path is :func:`minhash_signatures_df`
-    — explode + codegen'd hash aggregate — which is both ~100x faster
-    per core and shuffle-parallel at cluster scale."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingle_arr, lambda s: F.xxhash64(i, s))
-        ),
-    )
-
-
 # Universal-hash family for the md5perm mode: mh_i = (A_i·h + B_i) mod P
 # over a 32-bit md5-derived base hash. P is the smallest prime > 2^32;
 # A_i < 2^30 keeps every product < 2^62 (no int64 overflow in either
@@ -75,17 +55,8 @@ def mh_perm_constants(num_hashes: int = DEFAULT_NUM_HASHES):
 
 
 def _mh_hash_sql(i: int, col: str, family: str) -> str:
-    """SQL-string form of :func:`_mh_hash` (same operators, one JVM
-    parse instead of several py4j calls per hash member)."""
-    if family == "xxhash64":
-        return f"xxhash64({i}, {col})"
-    if family == "md5hex":
-        return f"md5(concat('{i}:', {col}))"
-    raise ValueError(f"unknown hash family: {family}")
-
-
-def _mh_hash(i: int, col: Column, family: str) -> Column:
-    """One member of the k-hash family.
+    """One member of the k-hash family, as a SQL string (one JVM parse
+    instead of several py4j calls per hash member).
 
     ``xxhash64`` (default) is the fast production path. ``md5hex`` is
     cross-engine reproducible: DuckDB's md5() emits the identical
@@ -94,9 +65,9 @@ def _mh_hash(i: int, col: Column, family: str) -> Column:
     element in both engines — which is what lets the LSH gate query
     carry a FULL value-hash oracle instead of a rows-only check."""
     if family == "xxhash64":
-        return F.xxhash64(F.lit(i), col)
+        return f"xxhash64({i}, {col})"
     if family == "md5hex":
-        return F.md5(F.concat(F.lit(f"{i}:"), col))
+        return f"md5(concat('{i}:', {col}))"
     raise ValueError(f"unknown hash family: {family}")
 
 
@@ -156,54 +127,33 @@ def minhash_signatures_df(
 
 
 def lsh_bands(
-    sig: Column | str,
+    sig: str,
     num_bands: int = DEFAULT_BANDS,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> Column:
-    """Hash each band (contiguous signature slice) to one bucket key.
+    """Hash each band (contiguous slice of the signature column named
+    ``sig``) to one bucket key.
 
     Returns ``array<struct<band_id int, band_hash bigint>>``; explode and
     equi-join on both fields. Two docs collide in a band iff that whole
     slice agrees — the classic (b, r) S-curve. Band indices are Python
     constants, so this is a flat (codegen-friendly) expression — no
-    nested lambdas."""
+    nested lambdas. Built as one SQL string (one JVM parse; see the
+    :func:`minhash_signatures_df` note). ``try_element_at`` yields NULL
+    rather than an ANSI-mode error on a short signature."""
     rows_per_band = num_hashes // num_bands
-    if isinstance(sig, str):
-        # SQL-string fast path (one JVM parse; see minhash_signatures_df
-        # note) — used by the pipeline callers, which always band a
-        # named column. try_element_at: NULL (like the Column path's
-        # F.get) rather than an ANSI-mode error on a short signature
-        # (ADVICE r10 — both paths must degrade identically).
-        bands = ", ".join(
-            f"struct(cast({b} as int) as band_id, xxhash64({b}, "
-            + "concat_ws(',', "
-            + ", ".join(
-                f"cast(try_element_at({sig}, {b * rows_per_band + j + 1})"
-                " as string)"
-                for j in range(rows_per_band)
-            )
-            + ")) as band_hash)"
-            for b in range(num_bands)
+    bands = ", ".join(
+        f"struct(cast({b} as int) as band_id, xxhash64({b}, "
+        + "concat_ws(',', "
+        + ", ".join(
+            f"cast(try_element_at({sig}, {b * rows_per_band + j + 1})"
+            " as string)"
+            for j in range(rows_per_band)
         )
-        return F.expr(f"array({bands})")
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band_id"),
-                F.xxhash64(
-                    F.lit(b),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.get(sig, b * rows_per_band + j).cast("string")
-                            for j in range(rows_per_band)
-                        ],
-                    ),
-                ).alias("band_hash"),
-            )
-            for b in range(num_bands)
-        ]
+        + ")) as band_hash)"
+        for b in range(num_bands)
     )
+    return F.expr(f"array({bands})")
 
 
 def signature_agreement(sig_a: Column, sig_b: Column) -> Column:

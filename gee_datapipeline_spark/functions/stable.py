@@ -18,8 +18,6 @@ FRP in MW ~1e2, prices ~1e4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,13 +40,6 @@ DECIMAL = "decimal(30,6)"
 # ~1e-5-probability midpoint straddle (policed by the fuzz soaks).
 DECIMAL_FINE = "decimal(38,12)"
 
-# Escape hatch for deployments that don't need the cross-engine /
-# cross-run bit-reproducibility contract: plain double sums are ~2×
-# faster than decimal accumulation on the hot aggregates. NEVER set
-# this where outputs are hash-compared (the oracle gate, diffable
-# backfills) — results become partitioning-dependent in the last ulps.
-FAST_SUMS = os.environ.get("SPARK_GRAFT_FAST_SUMS", "") == "1"
-
 
 def _floor_round(c: Column, scale: int) -> Column:
     """Floor-form half-up round (see :func:`stable_round`): the engine
@@ -67,13 +58,8 @@ def _floor_round(c: Column, scale: int) -> Column:
 def stable_sum(col: Column | str, scale: int = 2, dec: str = DECIMAL) -> Column:
     """Order-independent SUM of a double expression, rounded to `scale`
     in the midpoint-safe floor form. Negative sums round halves toward
-    +inf — see :func:`stable_round` for the signed-tie convention.
-
-    Under ``SPARK_GRAFT_FAST_SUMS=1`` the decimal routing is skipped
-    (plain double sum — see FAST_SUMS for the contract given up)."""
+    +inf — see :func:`stable_round` for the signed-tie convention."""
     c = F.col(col) if isinstance(col, str) else col
-    if FAST_SUMS:
-        return F.round(F.sum(c), scale)
     return _floor_round(F.sum(c.cast(dec)).cast("double"), scale)
 
 
@@ -81,8 +67,6 @@ def stable_avg(col: Column | str, scale: int = 6, dec: str = DECIMAL) -> Column:
     """Order-independent AVG: exact decimal sum / count, divided in
     double, rounded in the midpoint-safe floor form."""
     c = F.col(col) if isinstance(col, str) else col
-    if FAST_SUMS:
-        return F.round(F.sum(c) / F.count(c), scale)
     return _floor_round(
         F.sum(c.cast(dec)).cast("double") / F.count(c), scale
     )

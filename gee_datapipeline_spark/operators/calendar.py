@@ -4,15 +4,17 @@ The reference steps through calendar months with ``relativedelta`` date
 math (DataDownloader_V2.py:170-183) and detects data gaps by per-dataset
 emptiness checks (``size() <= 0``, DataDownloader_V1.py:100-129). In a
 set-based engine the month loop dissolves into ``sequence()`` — a generated
-spine relation — and the gap check becomes an anti-join of the spine
-against observed partitions. Calendar months (variable length, December
-wrap — SNPP:229-232) come from ``date_trunc``/``add_months``, never from
-fixed-duration windows (watch-list #3).
+spine relation (``date_spine_from``) — and the gap check (J5) is a plain
+``df.join(..., how="left_anti")`` of the spine against observed partitions
+at the call site (``date_spine_gaps``), which needs no helper. Calendar
+months (variable length, December wrap — SNPP:229-232) come from
+``date_trunc``/``add_months``, never from fixed-duration windows
+(watch-list #3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,33 +33,3 @@ def date_spine_from(
     return bounds.select(
         F.explode(F.expr(f"sequence(lo, hi, {step})")).alias(out)
     )
-
-
-def month_spine(spark: SparkSession, start: str, end: str) -> DataFrame:
-    """F1 — the monthly driver loop as a relation: one row per month with
-    the same bounds the reference computes (month start, clamped month end
-    = ``start + 1 month - 1 day``, DataDownloader_V2.py:176-178)."""
-    return spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(start).cast("date"),
-                F.lit(end).cast("date"),
-                F.expr("interval 1 month"),
-            )
-        ).alias("month_start")
-    ).select(
-        "month_start",
-        F.last_day("month_start").alias("month_end"),
-        F.date_format("month_start", "yyyy-MM").alias("month_label"),
-    )
-
-
-def detect_gaps(
-    spine: DataFrame, observed: DataFrame, on: str = "date"
-) -> DataFrame:
-    """J5 — spine rows with no observed partition: ``left_anti`` join.
-
-    At scale ``observed`` should be the pre-aggregated distinct partition
-    list (partition-pruned metadata-sized), so the anti-join broadcasts.
-    """
-    return spine.join(observed, on=on, how="left_anti")

@@ -101,10 +101,3 @@ def grid_resample(
             F.count(value).alias("n_obs"),
         )
     raise ValueError(f"unsupported resample agg {agg!r}")
-
-
-def date_spine(df: DataFrame, date_col: Column | str, out: str = "date") -> DataFrame:
-    """A9 — distinct ordered date spine (the viewer slider's date list,
-    index.html:164-167)."""
-    c = F.col(date_col) if isinstance(date_col, str) else date_col
-    return df.select(c.alias(out)).distinct().orderBy(out)

@@ -5,9 +5,6 @@ DataDownloader_V1.py:145) and map overlays (point-proximity,
 DataDownloader_V2.py:96-102). This module provides the queryable forms,
 each planned so its shuffle behavior is predictable at 100 TB:
 
-- equi joins (J3) — plain ``df.join``; Catalyst/AQE picks broadcast vs
-  sort-merge, and the helpers here only add explicit ``broadcast()`` where
-  one side is known dimension-sized.
 - interval/as-of joins (J4) — a broadcast range join against a bucketized
   spine. Spark has no native as-of join; the scalable form equi-joins on a
   coarse bucket of the range key first so the theta predicate only runs
@@ -15,7 +12,11 @@ each planned so its shuffle behavior is predictable at 100 TB:
 - proximity joins (J2) — bbox prefilter + haversine, with a grid-cell
   (bucketed) variant that turns the cross product into an equi-join on
   cell id; see ``functions.geo`` for the geo-specific pieces.
-- anti/semi joins (J1/J5) — ``left_semi`` / ``left_anti``.
+
+Equi (J3), semi (J1) and anti (J5) joins need no helper: the plans call
+``df.join(..., how=...)`` directly with ``inner`` / ``left_semi`` /
+``left_anti`` (e.g. ``active_customers_semi``, ``date_spine_gaps``), and
+Catalyst/AQE picks broadcast vs sort-merge.
 """
 
 from __future__ import annotations
@@ -24,18 +25,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """J3 — pixel-grid / star-schema equi-join."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on=list(on), how=how)
 
 
 def interval_join(
@@ -163,16 +152,6 @@ def asof_join(
         *[F.col("__ref").getField(c).alias(c) for c in ref_out],
         *probe_extra,
     )
-
-
-def semi_join(left: DataFrame, right: DataFrame, cond, how: str = "left_semi"):
-    """J1 — EXISTS-style pruning (clip semantics)."""
-    return left.join(right, cond, how)
-
-
-def anti_join(left: DataFrame, right: DataFrame, cond):
-    """J5 — NOT EXISTS (gap detection)."""
-    return left.join(right, cond, "left_anti")
 
 
 # --------------------------------------------------- Bloom prefilter

@@ -52,20 +52,6 @@ def minmax_normalize(
     return df.withColumn(out, F.round(norm, scale))
 
 
-def latest_per_group(
-    df: DataFrame, partition_keys: Sequence[str], order_col: Column | str
-) -> DataFrame:
-    """W2 — latest row per group (the slider's latest-date default,
-    index_viirs_frp.html:186)."""
-    c = F.col(order_col) if isinstance(order_col, str) else order_col
-    w = Window.partitionBy(*partition_keys).orderBy(c.desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def blocked_trailing_window(
     df: DataFrame, idx_col: str, n_preceding: int, block: int = 256
 ):

@@ -79,44 +79,37 @@ def generate_composite(
 def render_composite(
     composite: DataFrame,
     thresholds: DataFrame | None = None,
-    zero_preserving: bool = False,
-    colormap: str = "jet",
 ) -> DataFrame:
     """The rendering pass (DataDownloader_V2.py:62-92 /
     DataDownloader_V3.py:62-73): per-(dataset, bucket) min-max
     normalization (W1), optional WHO-threshold classification (F3),
-    RGBA channels (F9). Still lazy — a DataFrame of render-ready rows."""
+    RGBA channels (F9) in the 'jet' colormap. Still lazy — a DataFrame
+    of render-ready rows. The zero-preserving FRP normalization is
+    ``operators.windows.minmax_normalize(zero_preserving=True)``."""
     normed = minmax_normalize(
-        composite,
-        ["dataset", "bucket"],
-        value="value_agg",
-        zero_preserving=zero_preserving,
+        composite, ["dataset", "bucket"], value="value_agg"
     )
     if thresholds is not None:
         normed = classify_with_thresholds(
             normed, thresholds, on="dataset", value="value_agg",
             out="class_bucket",  # 'bucket' is the time bucket here
         )
-    return rgba_rows(normed, value_col="norm_value", colormap=colormap)
+    return rgba_rows(normed, value_col="norm_value")
 
 
-def export_composite(
-    composite: DataFrame,
-    out_dir: str,
-    formats: Sequence[str] = ("parquet", "csv"),
-) -> None:
+def export_composite(composite: DataFrame, out_dir: str) -> None:
     """The export boundary (geemap.ee_export_image,
-    DataDownloader_V1.py:149 + fix_transparency CSV): materialize the
-    composite once, partitioned by (dataset, bucket-as-date)."""
+    DataDownloader_V1.py:149 + fix_transparency CSV): parquet
+    partitioned by (dataset, bucket-as-date), then the lat,lon,mean CSV.
+    Each write is its own Spark job, so the composite is computed once
+    per format (twice per export)."""
     df = composite.withColumn("date", F.col("bucket"))
-    if "parquet" in formats:
-        write_pixels(df, os.path.join(out_dir, "parquet"))
-    if "csv" in formats:
-        write_points_csv(
-            df.filter(F.col("value_agg").isNotNull()),
-            os.path.join(out_dir, "csv"),
-            value_col="value_agg",
-        )
+    write_pixels(df, os.path.join(out_dir, "parquet"))
+    write_points_csv(
+        df.filter(F.col("value_agg").isNotNull()),
+        os.path.join(out_dir, "csv"),
+        value_col="value_agg",
+    )
 
 
 def run_monthly(

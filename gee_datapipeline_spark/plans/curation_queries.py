@@ -803,9 +803,9 @@ def _leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative -> 80/10/10 bucket. Deterministic on any engine,
     reproducible across runs — auditable the way a published data card
     requires."""
-    from .text_queries import _dedup_clusters_cached
+    from .text_queries import _dedup_clusters
 
-    clusters = _dedup_clusters_cached(spark, sf_dir)
+    clusters = _dedup_clusters(spark, sf_dir)
     hv = (
         F.conv(
             F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 8),
@@ -878,9 +878,9 @@ def _cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     per map partition instead of every member (a window + row_number
     would shuffle and sort ALL members). The quality join is doc_id
     equi-keyed."""
-    from .text_queries import _dedup_clusters_cached, _text_quality
+    from .text_queries import _dedup_clusters, _text_quality
 
-    clusters = _dedup_clusters_cached(spark, sf_dir).select("doc_id", "cluster_id")
+    clusters = _dedup_clusters(spark, sf_dir).select("doc_id", "cluster_id")
     quality = _text_quality(spark, sf_dir).select("doc_id", "quality_score")
     joined = clusters.join(quality, "doc_id")
     best = joined.groupBy("cluster_id").agg(
@@ -952,7 +952,7 @@ def _curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently on the full corpus, so the three can run as parallel
     stages and the intersection is two digest-keyed semi-joins — text
     never rides any shuffle."""
-    from .text_queries import _dedup_clusters_cached
+    from .text_queries import _dedup_clusters
 
     docs = _docs(spark, sf_dir)
     gates = _gopher_quality(spark, sf_dir).select("doc_id", "keep")
@@ -965,7 +965,7 @@ def _curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     canon = (
-        _dedup_clusters_cached(spark, sf_dir)
+        _dedup_clusters(spark, sf_dir)
         .filter(F.col("is_canonical"))
         .select("doc_id")
     )

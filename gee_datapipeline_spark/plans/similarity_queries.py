@@ -269,14 +269,14 @@ def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     is separately benched by ``ann_ivf_train`` — which is also the
     deployment amortization story (train once per corpus snapshot,
     serve many)."""
-    from ..functions.similarity import ann_ivf_topk, ivf_centroids_cached
+    from ..functions.similarity import ann_ivf_topk, ivf_centroids
 
     # (r10 measured: spreading the 2 000-row vector table before the
     # assignment ran 1.58 → 1.96 s interleaved — the added exchange
     # outweighs parallelizing this |corpus|'s assignment — reverted.)
     e = _emb(spark, sf_dir)
     probes = e.filter(F.col("vec_id") < N_QUERIES)
-    quantizer = ivf_centroids_cached(
+    quantizer = ivf_centroids(
         e, n_centroids=IVF_CENTROIDS, lloyd_iters=1, exact=True
     )
     return ann_ivf_topk(
@@ -446,13 +446,12 @@ register(
 
 
 def _ann_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone gate for IVF quantizer TRAINING (always fresh — never
-    the artifact cache): md5-ordered seed sample → quantized-dot cell
-    assignment → one decimal-stable Lloyd step. Emits the trained
-    centroid matrix flattened to (cid, dim, c_val) scalars so the
-    value-hash compares cell-by-cell. This keeps the training pipeline
-    under a full oracle while ``ann_ivf`` amortizes it via
-    ``ivf_centroids_cached``."""
+    """Standalone gate for IVF quantizer TRAINING: md5-ordered seed
+    sample → quantized-dot cell assignment → one decimal-stable Lloyd
+    step. Emits the trained centroid matrix flattened to (cid, dim,
+    c_val) scalars so the value-hash compares cell-by-cell. This keeps
+    the training pipeline under a full oracle of its own; ``ann_ivf``
+    runs the same :func:`ivf_centroids` training inside its plan."""
     from ..functions.similarity import ivf_centroids
 
     e = _emb(spark, sf_dir)
@@ -1000,8 +999,11 @@ register(
 
 def _pq_code_table(e: DataFrame) -> DataFrame:
     """(vec_id, m, code) — the PQ-encoded corpus (exact decimal argmin
-    per subvector, deterministic, so a cached copy is bit-identical to
-    a fresh encode and the training-inclusive oracle stays valid)."""
+    per subvector, deterministic, so every run's encode is bit-identical
+    and the training-inclusive oracle stays valid). ``ann_pq`` encodes
+    in-plan every run; the encode is separately gated by ``pq_codes``.
+    On a real deployment the code table is a persisted model artifact
+    rebuilt once per corpus snapshot."""
     from ..functions.similarity import decimal_sq_dist_slice
 
     cb = e.filter(F.col("vec_id") < PQ_K).select(
@@ -1026,21 +1028,6 @@ def _pq_code_table(e: DataFrame) -> DataFrame:
         .agg(F.min(F.struct(F.col("dist"), F.col("k_id"))).alias("b"))
         .select("vec_id", "m", F.col("b.k_id").alias("code"))
     )
-
-
-def _pq_codes_cached(e: DataFrame) -> DataFrame:
-    """Encode the PQ code table in-plan, every call (r11).
-
-    Until r10 this persisted the N×M code table to a fingerprint-keyed
-    parquet artifact across processes — ruled cross-run result
-    precomputation by the r10 verdict, so it is gone, along with the
-    fingerprint ``.first()`` whose full corpus pass existed only as the
-    cache key. The encode (corpus × K decimal subvector argmin) now
-    runs inside ``ann_pq``'s own timed plan; the train/serve
-    amortization story stays visible in the separately-benched
-    ``pq_codes`` encode gate. On a real deployment the code table is a
-    persisted model artifact rebuilt once per corpus snapshot."""
-    return _pq_code_table(e)
 
 
 def _ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,7 +1059,7 @@ def _ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = e.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("k_id"), F.col("embedding").alias("c_emb")
     )
-    codes = _pq_codes_cached(e)
+    codes = _pq_code_table(e)
     grid = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
@@ -1649,12 +1636,12 @@ def _knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scoring is the integer-quantized cosine (floor(v*2^20) dots over
     float64 norms) end to end, so every score is bit-identical across
     NumPy, Spark and DuckDB with no float-boundary margin arguments."""
-    from ..functions.similarity import ivf_centroids_cached, knn_join_ivf
+    from ..functions.similarity import ivf_centroids, knn_join_ivf
 
     # (r10 measured: the _ann_ivf spread revert applies here too,
     # 1.25 → 1.33 s interleaved — reverted.)
     e = _emb(spark, sf_dir)
-    quantizer = ivf_centroids_cached(
+    quantizer = ivf_centroids(
         e, n_centroids=IVF_CENTROIDS, lloyd_iters=1, exact=True
     )
     return knn_join_ivf(

@@ -1070,7 +1070,12 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     state). Every document gets a row; ``cluster_id`` is the min doc_id
     of its component (singletons map to themselves) and
     ``is_canonical`` marks the one doc per cluster a dedup pass keeps.
-    The oracle computes the same closure with a recursive CTE."""
+    The oracle computes the same closure with a recursive CTE.
+
+    ``leakage_safe_split``, ``cluster_representative`` and
+    ``curation_pipeline_e2e`` call this inside their own plans; the CC
+    output materializes once per plan (connected components ends in an
+    eager ``localCheckpoint``)."""
     from ..operators.graph import connected_components
 
     pairs = _ngram_jaccard_pairs(spark, sf_dir).select(
@@ -1086,24 +1091,6 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("is_canonical", F.col("cluster_id") == F.col("doc_id"))
     )
-
-
-def _dedup_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the CC pipeline in-plan, every call (r11).
-
-    Until r10 this persisted the (doc_id, cluster_id, is_canonical)
-    table to a fingerprint-keyed parquet artifact across processes —
-    ruled cross-run result precomputation by the r10 verdict, so it is
-    gone, along with the fingerprint scan that was its cache key. Each
-    consumer (``leakage_safe_split``, ``cluster_representative``,
-    ``curation_pipeline_e2e``) now carries the shingle + banding + CC
-    cost inside its own timed plan; within one plan the CC output is
-    already materialized once (connected components ends in an eager
-    ``localCheckpoint``). On a real deployment cluster assignment is a
-    persisted artifact computed once per corpus snapshot and consumed
-    by every keep/split/representative decision — that amortization is
-    a deployment property, not something a bench run may pre-pay."""
-    return _dedup_clusters(spark, sf_dir)
 
 
 register(

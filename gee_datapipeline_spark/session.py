@@ -75,9 +75,8 @@ def release_scratch(spark: SparkSession) -> int:
     back-to-back the dead scratch accumulates, and on a bounded driver
     heap the resulting GC pressure surfaces as latency in *later,
     unrelated* queries. Call between jobs (never mid-query — the blocks
-    are live until the consuming action finishes). Durable artifacts
-    (e.g. the IVF centroid cache) are parquet files on disk, not block
-    manager state, so this never invalidates them.
+    are live until the consuming action finishes). Files the jobs wrote
+    are not block manager state, so this never touches them.
 
     Returns the number of RDDs released."""
     import gc

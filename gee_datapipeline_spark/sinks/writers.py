@@ -25,15 +25,10 @@ from pyspark.sql import functions as F
 MAX_IMAGE_PIXELS = 2_000_000
 
 
-def write_pixels(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    spatial_sort: bool = False,
-    compression: str = "zstd",
-) -> None:
-    """S6 — the canonical partitioned store. Partition pruning on
-    (dataset, date) makes P1/P4 filters metadata-only at read time.
+def write_pixels(df: DataFrame, path: str, spatial_sort: bool = False) -> None:
+    """S6 — the canonical partitioned store (zstd parquet, overwritten
+    on re-export). Partition pruning on (dataset, date) makes P1/P4
+    filters metadata-only at read time.
 
     ``spatial_sort=True`` Z-orders rows within each output partition so
     parquet row-group min/max stats on (x, y) prune bbox queries inside
@@ -46,27 +41,22 @@ def write_pixels(
             "__z", z_order_key(F2.col("x"), F2.col("y"))
         ).sortWithinPartitions("__z").drop("__z")
     (
-        df.write.mode(mode)
-        .option("compression", compression)
+        df.write.mode("overwrite")
+        .option("compression", "zstd")
         .partitionBy("dataset", "date")
         .parquet(path)
     )
 
 
-def write_points_csv(
-    df: DataFrame,
-    path: str,
-    value_col: str = "value",
-    mode: str = "overwrite",
-    scale: int = 6,
-) -> None:
-    """S8 — lat,lon,mean CSV (fix_transparency.py:76-83; '%.6f' at :82)."""
+def write_points_csv(df: DataFrame, path: str, value_col: str = "value") -> None:
+    """S8 — lat,lon,mean CSV (fix_transparency.py:76-83; '%.6f' at :82),
+    overwritten on re-export."""
     out = df.select(
-        F.round("lat", scale).alias("lat"),
-        F.round("lon", scale).alias("lon"),
-        F.round(F.col(value_col), scale).alias("mean"),
+        F.round("lat", 6).alias("lat"),
+        F.round("lon", 6).alias("lon"),
+        F.round(F.col(value_col), 6).alias("mean"),
     )
-    out.write.mode(mode).option("header", "true").csv(path)
+    out.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def write_geotiffs(

@@ -96,20 +96,3 @@ def read_geojson_lines(
         F.parse_json("value").alias("f")
     )
     return _flatten_features(feats, src)
-
-
-def read_amenities_dir(spark: SparkSession, dir_path: str) -> DataFrame:
-    """All GeoJSON files of a directory unioned into one features table
-    (the six-overlay loop of the viewers, index.html:168-176)."""
-    import glob
-
-    dfs = [
-        read_geojson(spark, p)
-        for p in sorted(glob.glob(os.path.join(dir_path, "*.geojson")))
-    ]
-    if not dfs:
-        raise FileNotFoundError(f"no .geojson files under {dir_path}")
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out

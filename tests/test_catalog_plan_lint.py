@@ -145,19 +145,59 @@ def _global_windows(jplan, out):
         _global_windows(jplan.children().apply(i), out)
 
 
+# The only environment variables the package may read. Anything else is
+# a settable knob no caller asked for; add it here deliberately or not at all.
+ALLOWED_ENV_READS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR"}
+
+
+def _env_reads(tree) -> set[str]:
+    """Keys of ``os.environ.get(k)``, ``os.getenv(k)`` and
+    ``os.environ[k]`` in one module; a non-literal key reads as
+    ``<dynamic>``."""
+    import ast
+
+    def key(node) -> str:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return "<dynamic>"
+
+    reads = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            environ_get = (
+                f.attr == "get"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "environ"
+            )
+            if (environ_get or f.attr == "getenv") and node.args:
+                reads.add(key(node.args[0]))
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "environ"
+        ):
+            reads.add(key(node.slice))
+    return reads
+
+
 def test_no_cross_run_artifact_cache_in_package():
     """r10 verdict item 1: no queries() path may read (or write)
     $SPARK_GRAFT_ARTIFACT_DIR — cross-run, test-data-keyed parquet
     artifacts are result precomputation. Enforced structurally: the
     package source must not reference the env var or its legacy
-    default directory at all (docstrings explaining the removal live
-    in this test's history and OPTIMIZATION_r11.md)."""
+    default directory at all.
+
+    The same walk pins the package's env knobs: it must read exactly
+    ``ALLOWED_ENV_READS``."""
+    import ast
     import os
 
     import gee_datapipeline_spark as pkg
 
     root = os.path.dirname(os.path.abspath(pkg.__file__))
     hits = []
+    reads: set[str] = set()
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             if not f.endswith(".py"):
@@ -166,11 +206,11 @@ def test_no_cross_run_artifact_cache_in_package():
             with open(p, encoding="utf-8") as fh:
                 src = fh.read()
             for needle in ("SPARK_GRAFT_ARTIFACT_DIR", "gee_spark_artifacts"):
-                if needle in src.replace(
-                    "``$SPARK_GRAFT_ARTIFACT_DIR``", ""  # docstring history
-                ):
+                if needle in src:
                     hits.append((os.path.relpath(p, root), needle))
+            reads |= _env_reads(ast.parse(src, filename=p))
     assert not hits, f"cross-run artifact dir referenced: {hits}"
+    assert reads == ALLOWED_ENV_READS, f"package env reads: {sorted(reads)}"
 
 
 @pytest.mark.parametrize("name", gate_reference_queries(LINTABLE))

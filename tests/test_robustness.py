@@ -127,16 +127,3 @@ def test_release_scratch_frees_checkpoint_blocks(spark):
     del df
     assert release_scratch(spark) >= 1
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
-
-
-def test_fast_sums_escape_hatch(spark, monkeypatch):
-    """SPARK_GRAFT_FAST_SUMS skips the decimal routing: same rounded
-    value on benign data, and the plan carries no decimal cast."""
-    from gee_datapipeline_spark.functions import stable
-
-    df = spark.range(1000).selectExpr("cast(id as double) / 7 AS v")
-    slow = df.agg(stable.stable_sum("v", 2).alias("s")).first()["s"]
-    monkeypatch.setattr(stable, "FAST_SUMS", True)
-    fast_df = df.agg(stable.stable_sum("v", 2).alias("s"))
-    assert "decimal" not in fast_df._jdf.queryExecution().executedPlan().toString().lower()
-    assert fast_df.first()["s"] == slow

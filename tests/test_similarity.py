@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from gee_datapipeline_spark.functions.similarity import (
     ann_lsh_topk,
     decimal_dot,
-    hyperplane_buckets,
     l2_norm,
 )
 from gee_datapipeline_spark.plans.registry import _load_all
@@ -31,15 +30,6 @@ def test_decimal_dot_exact(spark):
 def test_l2_norm(spark):
     df = spark.createDataFrame([([3.0, 4.0],)], ["a"])
     assert df.select(l2_norm(F.col("a")).alias("n")).collect()[0].n == 5.0
-
-
-def test_hyperplane_buckets_deterministic(spark):
-    """Same vector → same buckets across independent evaluations."""
-    df = spark.createDataFrame([([0.5] * 8,), ([0.5] * 8,)], ["e"])
-    rows = df.select(
-        hyperplane_buckets(F.col("e"), num_tables=4, num_planes=4).alias("b")
-    ).collect()
-    assert rows[0].b == rows[1].b
 
 
 def test_ann_lsh_recall_vs_bruteforce(spark):
@@ -164,46 +154,34 @@ def test_cosine_zero_norm_guard(spark):
     assert assigned[1] == 1 and assigned[3] == 2
 
 
-def test_ivf_centroids_retrained_per_call_no_artifact(spark, tmp_path):
+def test_ivf_centroids_retrained_per_call_no_artifact(
+    spark, tmp_path, monkeypatch
+):
     """r11: the cross-run quantizer artifact is gone — every call
     trains in-plan. Exact-mode training is deterministic (repeat calls
-    bit-identical, equal to a direct ivf_centroids run) and no parquet
-    is persisted, even when a cache_dir is passed (ignored for
-    signature compatibility)."""
+    bit-identical) and nothing is written under
+    $SPARK_GRAFT_ARTIFACT_DIR even when the legacy env var points
+    somewhere writable."""
     import os
 
     from pyspark.sql import functions as F
 
-    from gee_datapipeline_spark.functions.similarity import (
-        ivf_centroids,
-        ivf_centroids_cached,
-    )
+    from gee_datapipeline_spark.functions.similarity import ivf_centroids
 
     vecs = spark.createDataFrame(
         [(i, [float(i % 7), float((3 * i) % 5), 1.0]) for i in range(40)],
         ["vec_id", "embedding"],
     )
     cache = str(tmp_path / "artifacts")
-    kw = dict(n_centroids=4, lloyd_iters=1, exact=True, cache_dir=cache)
-    first = sorted(
-        ivf_centroids_cached(vecs, **kw).collect(), key=lambda r: r.cid
-    )
-    again = sorted(
-        ivf_centroids_cached(vecs, **kw).collect(), key=lambda r: r.cid
-    )
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", cache)
+    kw = dict(n_centroids=4, lloyd_iters=1, exact=True)
+    first = sorted(ivf_centroids(vecs, **kw).collect(), key=lambda r: r.cid)
+    again = sorted(ivf_centroids(vecs, **kw).collect(), key=lambda r: r.cid)
     assert [(r.cid, r.c_emb) for r in again] == [
         (r.cid, r.c_emb) for r in first
     ]
-    fresh = sorted(
-        ivf_centroids(vecs, n_centroids=4, lloyd_iters=1, exact=True)
-        .collect(),
-        key=lambda r: r.cid,
-    )
-    assert [(r.cid, r.c_emb) for r in fresh] == [
-        (r.cid, r.c_emb) for r in first
-    ]
-    assert not os.path.exists(cache), (
-        "cache_dir must be ignored — no quantizer artifact on disk"
+    assert not os.path.exists(cache) or not os.listdir(cache), (
+        "no quantizer artifact may be persisted"
     )
     # a corpus change simply trains on the new data (no staleness
     # possible when there is nothing cached)
@@ -213,7 +191,7 @@ def test_ivf_centroids_retrained_per_call_no_artifact(spark, tmp_path):
                                              F.lit(9.0)))
         .otherwise(F.col("embedding")),
     )
-    got2 = ivf_centroids_cached(changed, **kw).collect()
+    got2 = ivf_centroids(changed, **kw).collect()
     assert got2  # trained successfully on the changed corpus
 
 
@@ -445,18 +423,14 @@ def test_pq_codes_rebuilt_per_call_no_artifact(spark, tmp_path, monkeypatch):
     import os
 
     from gee_datapipeline_spark.catalog import load_table
-    from gee_datapipeline_spark.plans.similarity_queries import (
-        _pq_code_table,
-        _pq_codes_cached,
-    )
+    from gee_datapipeline_spark.plans.similarity_queries import _pq_code_table
 
     cache = str(tmp_path / "artifacts")
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", cache)
     e = load_table(spark, SF_SMOKE, "embeddings")
     key = lambda rows: sorted((r.vec_id, r.m, r.code) for r in rows)
-    first = key(_pq_codes_cached(e).collect())
-    assert key(_pq_codes_cached(e).collect()) == first  # deterministic
-    assert key(_pq_code_table(e).collect()) == first    # same encode
+    first = key(_pq_code_table(e).collect())
+    assert key(_pq_code_table(e).collect()) == first  # deterministic
     assert not os.path.exists(cache) or not os.listdir(cache), (
         "no parquet artifact may be persisted for the PQ codes"
     )

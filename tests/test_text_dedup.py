@@ -11,7 +11,7 @@ from gee_datapipeline_spark.functions import text as X
 from gee_datapipeline_spark.functions.dedup import (
     hamming64,
     minhash_lsh_pairs,
-    minhash_signature,
+    minhash_signatures_df,
     signature_agreement,
     simhash64,
     simhash_pairs,
@@ -65,14 +65,13 @@ def _exact_jaccard(spark, docs):
 
 def test_minhash_estimates_jaccard(spark, near_dup_docs):
     """Signature agreement approximates exact Jaccard within ~0.2 for
-    the high-similarity pairs (32 hashes → σ ≈ 0.09)."""
+    the high-similarity pairs (32 hashes → σ ≈ 0.09). Signatures come
+    from the pipeline kernel; a doc with no 3-shingle has no signature
+    row."""
     exact = _exact_jaccard(spark, near_dup_docs)
-    sigs = near_dup_docs.select(
-        "doc_id",
-        minhash_signature(
-            X.shingles(X.tokens(F.col("text"))), 32
-        ).alias("sig"),
-    ).filter(F.size("sig") > 0)
+    sigs = minhash_signatures_df(
+        X.shingles_df(near_dup_docs, "doc_id", F.col("text"), 3), 32
+    )
     a = sigs.selectExpr("doc_id as doc_a", "sig as sa")
     b = sigs.selectExpr("doc_id as doc_b", "sig as sb")
     est = (
