@@ -242,8 +242,7 @@ def banded_signatures(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Banded MinHash signatures: one row per (doc, band) with the full
-    signature carried alongside — the schema of the persistable corpus
-    index (:func:`minhash_index_write`) and the probe side of
+    signature carried alongside — both join sides of
     :func:`minhash_incremental_pairs`."""
     from .text import shingles_df
 
@@ -260,71 +259,8 @@ def banded_signatures(
     ).select("doc_id", "sig", "band.band_id", "band.band_hash")
 
 
-def minhash_index_write(
+def minhash_incremental_pairs(
     corpus: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: Column,
-    threshold: float = 0.5,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
-    family: str = "xxhash64",
-) -> None:
-    """Persist the corpus's banded MinHash signatures as a build-once
-    parquet artifact. At 100 TB the corpus is shingled and hashed
-    exactly ONCE; every future ingestion batch probes this table
-    (:func:`minhash_index_probe`) instead of recomputing the corpus
-    side. Probe-time callers must pass the same (num_hashes, num_bands,
-    shingle_n, family) the index was built with — the parameters are
-    part of the artifact's identity, like a model checkpoint's config.
-    New batches are appended to the index with
-    :func:`minhash_index_append` after their own probe pass."""
-    banded_signatures(
-        corpus,
-        id_col,
-        text_col,
-        num_hashes,
-        num_bands,
-        shingle_n,
-        family,
-        threshold,
-    ).write.mode("overwrite").parquet(path)
-
-
-def minhash_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str,
-    text_col: Column,
-    threshold: float = 0.5,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
-    family: str = "xxhash64",
-) -> None:
-    """Fold a probed batch INTO the persisted index
-    (:func:`minhash_index_write`) so future batches dedup against it
-    too — the second half of the ingestion loop: probe, decide keeps,
-    append the keepers. Parquet ``append`` adds new files only; the
-    existing corpus signatures are never rewritten, so the operation
-    is O(batch) like the probe. Parameters must match the index's
-    build parameters (they are the artifact's identity)."""
-    banded_signatures(
-        batch,
-        id_col,
-        text_col,
-        num_hashes,
-        num_bands,
-        shingle_n,
-        family,
-        threshold,
-    ).write.mode("append").parquet(path)
-
-
-def minhash_index_probe(
-    spark,
-    path: str,
     batch: DataFrame,
     id_col: str,
     text_col: Column,
@@ -334,12 +270,33 @@ def minhash_index_probe(
     shingle_n: int = 3,
     family: str = "xxhash64",
 ) -> DataFrame:
-    """Probe a persisted corpus index (:func:`minhash_index_write`)
-    with a new batch: only the batch is shingled/hashed; its banded
-    signatures broadcast into a single pass over the index parquet —
-    zero corpus-side shuffle, O(batch) new compute."""
-    idx = spark.read.parquet(path)
-    probe = F.broadcast(
+    """Incremental near-dup: match a NEW BATCH against an EXISTING
+    corpus, returning (corpus_id, batch_id, est_jaccard) pairs.
+
+    This is the ingestion shape at 100 TB: both sides are banded in
+    the same plan, the batch's bands probe the corpus's on the
+    (band_id, band_hash) key, and the corpus is never self-joined. A
+    daily 100 GB batch against a 100 TB corpus costs one corpus
+    banding pass plus one probe, instead of the
+    O(corpus²-candidates) full re-dedup.
+
+    The batch side is typically orders of magnitude smaller than the
+    corpus, so its exploded bands are broadcast — the corpus-side scan
+    joins with zero shuffle. Within-batch duplicates are a separate
+    (batch-only) :func:`minhash_lsh_pairs` pass, deliberately not
+    duplicated here.
+    """
+    c = banded_signatures(
+        corpus,
+        id_col,
+        text_col,
+        num_hashes,
+        num_bands,
+        shingle_n,
+        family,
+        threshold,
+    ).alias("c")
+    b = F.broadcast(
         banded_signatures(
             batch,
             id_col,
@@ -350,17 +307,7 @@ def minhash_index_probe(
             family,
             threshold,
         )
-    )
-    return _banded_probe(idx, probe, threshold)
-
-
-def _banded_probe(
-    corpus_banded: DataFrame, batch_banded: DataFrame, threshold: float
-) -> DataFrame:
-    """(band_id, band_hash) equi-join of pre-banded corpus × batch
-    signatures → deduped candidate pairs → signature-agreement
-    estimate, thresholded."""
-    c, b = corpus_banded.alias("c"), batch_banded.alias("b")
+    ).alias("b")
     cand = (
         c.join(
             b,
@@ -382,60 +329,6 @@ def _banded_probe(
             signature_agreement(F.col("sig_c"), F.col("sig_b")), 6
         ).alias("est_jaccard"),
     ).filter(F.col("est_jaccard") >= threshold)
-
-
-def minhash_incremental_pairs(
-    corpus: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: Column,
-    threshold: float = 0.5,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
-    family: str = "xxhash64",
-) -> DataFrame:
-    """Incremental near-dup: match a NEW BATCH against an EXISTING
-    corpus index, returning (corpus_id, batch_id, est_jaccard) pairs.
-
-    This is the production ingestion shape at 100 TB: the corpus's
-    banded signatures are a build-once artifact
-    (:func:`minhash_index_write` persists exactly this plan's corpus
-    side); each arriving batch computes only ITS signatures and probes
-    the index — the corpus is never self-joined and never re-shingled.
-    A daily 100 GB batch against a 100 TB corpus costs O(batch) new
-    work plus one index probe, instead of the O(corpus²-candidates)
-    full re-dedup.
-
-    The batch side is typically orders of magnitude smaller than the
-    corpus, so its exploded bands are broadcast — the corpus-side scan
-    joins with zero shuffle. Within-batch duplicates are a separate
-    (batch-only) :func:`minhash_lsh_pairs` pass, deliberately not
-    duplicated here.
-    """
-    c = banded_signatures(
-        corpus,
-        id_col,
-        text_col,
-        num_hashes,
-        num_bands,
-        shingle_n,
-        family,
-        threshold,
-    )
-    b = F.broadcast(
-        banded_signatures(
-            batch,
-            id_col,
-            text_col,
-            num_hashes,
-            num_bands,
-            shingle_n,
-            family,
-            threshold,
-        )
-    )
-    return _banded_probe(c, b, threshold)
 
 
 # ------------------------------------------------------------- SimHash

@@ -15,7 +15,7 @@ brute-force baseline in ``tests/``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _DEC = "decimal(38,12)"

@@ -221,11 +221,7 @@ def write_geotiffs_multiband(
     )
 
 
-def rgba_rows(
-    df: DataFrame,
-    value_col: str = "norm_value",
-    colormap: str = "jet",
-) -> DataFrame:
+def rgba_rows(df: DataFrame, value_col: str = "norm_value") -> DataFrame:
     """S7 (data side) — colormap a normalized [0,1] value to RGBA uint8
     channels as columns (DataDownloader_V1.py:64-68: matplotlib jet +
     alpha=0 where nodata; fix_transparency.py:35-41 transparency rule).
@@ -238,16 +234,9 @@ def rgba_rows(
         clamped = F.least(F.greatest(expr, F.lit(0.0)), F.lit(1.0))
         return F.round(clamped * 255).cast("int")
 
-    if colormap == "jet":
-        r = chan(1.5 - F.abs(v - 0.75) * 4)
-        g = chan(1.5 - F.abs(v - 0.50) * 4)
-        b = chan(1.5 - F.abs(v - 0.25) * 4)
-    elif colormap == "reds":
-        r = chan(F.lit(1.0) - v * 0.0)
-        g = chan(1.0 - v)
-        b = chan(1.0 - v)
-    else:
-        raise ValueError(f"unknown colormap {colormap!r}")
+    r = chan(1.5 - F.abs(v - 0.75) * 4)
+    g = chan(1.5 - F.abs(v - 0.50) * 4)
+    b = chan(1.5 - F.abs(v - 0.25) * 4)
     alpha = F.when(
         F.col(value_col).isNull() | (F.col(value_col) <= 0), 0
     ).otherwise(255)

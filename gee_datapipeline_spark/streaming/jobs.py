@@ -19,11 +19,6 @@ Streaming-native equivalents:
 State-store sizing at 100 TB: the windowed aggregate keys state by
 (window, cell); watermarking bounds state to (delay / window) windows per
 cell. Session state is bounded by active incidents only.
-
-``kmv_distinct_state`` and ``cms_heavy_state`` stay Python state
-functions on purpose: Spark's native ``theta_sketch_agg`` and
-``count_min_sketch`` use other hashes, so they cannot reproduce the md5
-estimators that the batch-parity tests pin bit-exact.
 """
 
 from __future__ import annotations
@@ -142,27 +137,6 @@ def incremental_max_state(stream: DataFrame) -> DataFrame:
     )
 
 
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static join: enrich each micro-batch with a static
-    dimension table (the streaming form of the amenity overlay J2 —
-    "which district / how near a power plant is this detection",
-    DataDownloader_V2.py:96-102, resolved at ingest time instead of
-    render time).
-
-    The static side is broadcast: every executor holds the dimension
-    once, each micro-batch is a local hash join — STATELESS, so no
-    state store, no watermark interaction, and the join cannot become
-    the scale bottleneck (amenity tables are ≤ thousands of rows, §0).
-    The static side is re-read per micro-batch, so a dimension update
-    (new power plant) is picked up without restarting the query."""
-    return stream.join(F.broadcast(dim), on, how)
-
-
 def enrich_stream_roads(
     stream: DataFrame,
     segments: DataFrame,
@@ -178,8 +152,8 @@ def enrich_stream_roads(
     1. ``line_proximity_pairs`` — STATELESS stream-static broadcast
        hash join on the covering-cell key (every executor holds the
        exploded segment table once; no state store, no watermark
-       interaction; re-read per micro-batch so a road-network update
-       is picked up without restart, like :func:`enrich_stream`).
+       interaction; the static side is re-read per micro-batch, so a
+       road-network update is picked up without restart).
     2. a complete-mode aggregate of max(value) / min(distance) per
        (road, dataset). Both are DUPLICATE-TOLERANT (idempotent under
        replay: max and min of a multiset don't change when members
@@ -284,19 +258,6 @@ def correlate_streams(
     )
 
 
-def _uncommitted_batch_target(
-    batch_df: DataFrame, out_dir: str, batch_id: int
-) -> str | None:
-    """``out_dir/batch_id=<id>``, or None when its ``_SUCCESS`` marker
-    already exists (the batch is committed; see
-    :func:`idempotent_batch_writer`)."""
-    target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
-    spark = batch_df.sparkSession
-    marker = spark._jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    return None if fs.exists(marker) else target
-
-
 def idempotent_batch_writer(out_dir: str):
     """Exactly-once file sink for ``foreachBatch``: each micro-batch
     lands in ``out_dir/batch_id=<id>/`` and a batch directory that
@@ -320,250 +281,12 @@ def idempotent_batch_writer(out_dir: str):
     Returns the callback to pass to ``writeStream.foreachBatch``."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        target = _uncommitted_batch_target(batch_df, out_dir, batch_id)
-        if target is not None:
+        target = f"{out_dir.rstrip('/')}/batch_id={batch_id}"
+        spark = batch_df.sparkSession
+        marker = spark._jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
+        fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(marker):
             batch_df.write.mode("overwrite").parquet(target)
 
     return write
 
-
-DOCS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-
-def ingest_dedup_stream(
-    spark: SparkSession,
-    in_dir: str,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    **minhash_params,
-) -> StreamingQuery:
-    """The streaming ingestion-dedup loop: every arriving micro-batch
-    of documents is probed against the persisted MinHash index
-    (:func:`..functions.dedup.minhash_index_probe` — O(batch) work,
-    batch signatures broadcast, the corpus never recomputed), near-dup
-    matches are dropped, and the SURVIVORS are both written to
-    ``out_dir/batch_id=<n>/`` and folded into the index
-    (:func:`..functions.dedup.minhash_index_append`) so later batches
-    dedup against earlier ones — the full 100 TB ingestion pipeline as
-    one continuously-running query.
-
-    ``foreachBatch`` is the right tool (not a stream-static join): the
-    per-batch logic joins against an EXTERNAL artifact that the batch
-    itself must then update, which no declarative streaming join can
-    express. Exactly-once: the batch output directory's ``_SUCCESS``
-    marker is the commit point (checked through the Hadoop FS API, as
-    in :func:`idempotent_batch_writer`); a replayed batch whose marker
-    exists is skipped wholesale. A crash between the signature append
-    and the output commit re-appends the batch's signatures on replay
-    — harmless, because the probe de-duplicates candidate pairs, so
-    duplicate index rows can never change a keep/drop decision.
-
-    Within-batch near-dups are deliberately out of scope here (exactly
-    as in the batch :func:`..functions.dedup.minhash_incremental_pairs`)
-    — run :func:`..functions.dedup.minhash_lsh_pairs` on the batch
-    first if intra-batch duplicates are possible."""
-    from ..functions.dedup import minhash_index_append, minhash_index_probe
-
-    src = stream_from_dir(spark, in_dir, DOCS_STREAM_SCHEMA)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        target = _uncommitted_batch_target(batch_df, out_dir, batch_id)
-        if target is None:
-            return
-        s = batch_df.sparkSession
-        matches = minhash_index_probe(
-            s,
-            index_path,
-            batch_df,
-            "doc_id",
-            F.col("text"),
-            threshold,
-            **minhash_params,
-        )
-        dup_ids = matches.select(
-            F.col("batch_id").alias("doc_id")
-        ).distinct()
-        keep = batch_df.join(dup_ids, "doc_id", "left_anti").localCheckpoint()
-        minhash_index_append(
-            keep, index_path, "doc_id", F.col("text"), threshold,
-            **minhash_params,
-        )
-        keep.write.mode("overwrite").parquet(target)
-
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-# (source, text) wire schema for the per-source sketch jobs below —
-# distinct from DOCS_STREAM_SCHEMA above (doc_id, text), which the
-# ingestion-dedup loop consumes. A second module-level assignment of
-# the same name would silently shadow the first (it did, for one
-# commit — caught by test_ingest_dedup_stream_cross_batch).
-SOURCE_DOCS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-KMV_STREAM_K = 16
-_KMV_STREAM_SCALE = float(1 << 60)
-
-
-def kmv_distinct_state(stream: DataFrame, k: int = KMV_STREAM_K) -> DataFrame:
-    """Streaming cardinality: per-source KMV bottom-k content sketch
-    maintained in the state store — the incremental form of the batch
-    ``kmv_distinct_overlap`` gate (same hash, same (K-1)/h_K estimator,
-    so a replayed stream converges to the batch answer exactly).
-
-    State per source is AT MOST k int64 hashes regardless of stream
-    length (the sketch property that makes this safe at 100 TB: a
-    billion-doc source still holds 16 longs), and the merge is
-    associative — checkpoint recovery or shuffled arrival order cannot
-    change the sketch. Each update emits the refreshed
-    (n_docs, distinct estimate) for the touched source."""
-    import pandas as pd
-
-    def update(key, pdfs, state):
-        hs, n = (state.get if state.exists else ((), 0))
-        merged = set(hs)
-        for pdf in pdfs:
-            n += int(len(pdf))
-            merged.update(int(h) for h in pdf["h"].dropna())
-        hs = sorted(merged)[:k]
-        state.update((hs, n))
-        cnt = len(hs)
-        est = (
-            float(cnt)
-            if cnt < k
-            else float(k - 1) / (float(hs[-1]) / _KMV_STREAM_SCALE)
-        )
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_docs": [n],
-                "est_distinct": [est],
-            }
-        )
-
-    hashed = stream.select(
-        "source",
-        F.conv(
-            F.substring(F.md5(F.coalesce(F.col("text"), F.lit(""))), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
-    )
-    return hashed.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType="source string, n_docs long, est_distinct double",
-        stateStructType="hs array<bigint>, n bigint",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
-CMS_STREAM_DEPTH = 4
-CMS_STREAM_WIDTH = 512
-CMS_STREAM_POOL = 64
-
-
-def cms_heavy_state(
-    stream: DataFrame,
-    k: int = 10,
-    depth: int = CMS_STREAM_DEPTH,
-    width: int = CMS_STREAM_WIDTH,
-    pool: int = CMS_STREAM_POOL,
-) -> DataFrame:
-    """Streaming heavy hitters: a per-source Count-Min sketch plus a
-    bounded candidate pool maintained in the state store — the
-    incremental form of the batch ``cms_heavy_hitters`` gate (same md5
-    base hash, same (a·h+b) mod p mod w bucket family from
-    ``functions.sketches``, so cell counts and point estimates from a
-    replayed stream are BIT-IDENTICAL to the batch sketch: CMS is a
-    monoid and the update order cannot change a cell).
-
-    State per source is fixed-size regardless of stream length:
-    depth·width int64 cells + ≤``pool`` candidate terms (the classic
-    CMS+heap construction, Cormode & Muthukrishnan 2005 §4). Every
-    batch: add the batch's term counts into the cells, re-estimate the
-    union of surviving candidates and the batch's terms against the
-    updated cells, keep the top ``pool``, and emit the top ``k`` with
-    their estimates. A term can only enter the shortlist while it is
-    arriving — the standard CMS+heap admission property — so the pool
-    is sized ≥ the shortlist the consumer reads (k) with headroom.
-
-    Tokenization matches the batch gate (lower, trim, split on
-    whitespace runs); empty texts contribute nothing."""
-    import hashlib
-
-    import pandas as pd
-
-    from ..functions.dedup import MH_PERM_P, mh_perm_constants
-
-    a, b = mh_perm_constants(depth)
-
-    def buckets(term: str) -> list[int]:
-        h = int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16)
-        return [((a[i] * h + b[i]) % MH_PERM_P) % width for i in range(depth)]
-
-    def estimate(cells: list[int], bks: list[int]) -> int:
-        return min(cells[i * width + bks[i]] for i in range(depth))
-
-    def update(key, pdfs, state):
-        if state.exists:
-            cells, n, cand = state.get
-            cells = list(cells)
-            cand = list(cand)
-        else:
-            cells, n, cand = [0] * (depth * width), 0, []
-        batch_terms: dict[str, int] = {}
-        for pdf in pdfs:
-            for text in pdf["text"].dropna():
-                for term in str(text).lower().strip().split():
-                    batch_terms[term] = batch_terms.get(term, 0) + 1
-                    n += 1
-        for term, c in batch_terms.items():
-            for i, bk in enumerate(buckets(term)):
-                cells[i * width + bk] += c
-        scored = sorted(
-            (
-                (-estimate(cells, buckets(t)), t)
-                for t in set(cand) | set(batch_terms)
-            ),
-        )[:pool]
-        cand = [t for _, t in scored]
-        state.update((cells, n, cand))
-        top = scored[:k]
-        yield pd.DataFrame(
-            {
-                "source": [key[0]] * len(top),
-                "term": [t for _, t in top],
-                "est": [-e for e, _ in top],
-                "n_tokens": [n] * len(top),
-                "rk": list(range(1, len(top) + 1)),
-            }
-        )
-
-    return stream.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "source string, term string, est bigint, "
-            "n_tokens bigint, rk int"
-        ),
-        stateStructType="cells array<bigint>, n bigint, cand array<string>",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )

@@ -213,6 +213,33 @@ def test_no_cross_run_artifact_cache_in_package():
     assert reads == ALLOWED_ENV_READS, f"package env reads: {sorted(reads)}"
 
 
+def test_package_annotations_resolve():
+    """Every function a package module defines has annotations that
+    resolve: under ``from __future__ import annotations`` a name used
+    only in a hint (say ``DataFrame``) can go unimported and nothing
+    fails until ``typing.get_type_hints`` evaluates it. ``plans/`` is
+    left out because its modules write fixtures at import."""
+    import importlib
+    import inspect
+    import pkgutil
+    import typing
+
+    import gee_datapipeline_spark as pkg
+
+    unresolved = []
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        if info.name.startswith(pkg.__name__ + ".plans"):
+            continue
+        mod = importlib.import_module(info.name)
+        for name, fn in vars(mod).items():
+            if inspect.isfunction(fn) and fn.__module__ == mod.__name__:
+                try:
+                    typing.get_type_hints(fn)
+                except NameError as e:
+                    unresolved.append(f"{info.name}.{name}: {e}")
+    assert not unresolved, "\n".join(unresolved)
+
+
 @pytest.mark.parametrize("name", gate_reference_queries(LINTABLE))
 def test_plan_lint(name, spark):
     df = QUERIES[name].spark(spark, SF_SMOKE)

@@ -278,60 +278,6 @@ def test_minhash_incremental_broadcasts_batch(spark, near_dup_docs):
     assert "BroadcastHashJoin" in plan
 
 
-def test_minhash_index_write_probe_roundtrip(spark, near_dup_docs, tmp_path):
-    """The persisted index artifact is semantically transparent: build
-    index from the corpus, probe with the batch — identical pairs and
-    estimates to the direct (unpersisted) incremental pass."""
-    from gee_datapipeline_spark.functions.dedup import (
-        minhash_incremental_pairs,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-
-    corpus = near_dup_docs.filter(F.col("doc_id") % 2 == 0)
-    batch = near_dup_docs.filter(F.col("doc_id") % 2 == 1)
-    path = str(tmp_path / "minhash_idx")
-    minhash_index_write(corpus, path, "doc_id", F.col("text"), threshold=0.3)
-    probed = minhash_index_probe(
-        spark, path, batch, "doc_id", F.col("text"), threshold=0.3
-    )
-    direct = minhash_incremental_pairs(
-        corpus, batch, "doc_id", F.col("text"), threshold=0.3
-    )
-    got = sorted(map(tuple, probed.collect()))
-    want = sorted(map(tuple, direct.collect()))
-    assert got == want and len(got) > 0
-
-
-def test_minhash_index_append_extends_probe_scope(spark, near_dup_docs, tmp_path):
-    """The ingestion loop: after appending batch-1 signatures to the
-    index, a batch-2 probe sees corpus AND batch-1 — identical to the
-    direct incremental pass against their union."""
-    from gee_datapipeline_spark.functions.dedup import (
-        minhash_incremental_pairs,
-        minhash_index_append,
-        minhash_index_probe,
-        minhash_index_write,
-    )
-
-    corpus = near_dup_docs.filter(F.col("doc_id") % 3 == 0)
-    batch1 = near_dup_docs.filter(F.col("doc_id") % 3 == 1)
-    batch2 = near_dup_docs.filter(F.col("doc_id") % 3 == 2)
-    path = str(tmp_path / "minhash_idx")
-    minhash_index_write(corpus, path, "doc_id", F.col("text"), threshold=0.3)
-    minhash_index_append(batch1, path, "doc_id", F.col("text"), threshold=0.3)
-    probed = minhash_index_probe(
-        spark, path, batch2, "doc_id", F.col("text"), threshold=0.3
-    )
-    direct = minhash_incremental_pairs(
-        corpus.unionByName(batch1), batch2, "doc_id", F.col("text"),
-        threshold=0.3,
-    )
-    got = sorted(map(tuple, probed.collect()))
-    want = sorted(map(tuple, direct.collect()))
-    assert got == want and len(got) > 0
-
-
 # ------------------------------------------------------------ winnowing
 
 
