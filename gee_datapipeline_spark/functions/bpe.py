@@ -82,9 +82,10 @@ def pair_counts(vocab: DataFrame) -> DataFrame:
 
 
 def learn_bpe(
-    words: DataFrame, n_merges: int, min_count: int = 2
+    words: DataFrame, n_merges: int
 ) -> list[tuple[str, str, int]]:
-    """Learn up to ``n_merges`` merges from a (word, count) DataFrame.
+    """Learn up to ``n_merges`` merges from a (word, count) DataFrame,
+    stopping early once the best pair occurs fewer than twice.
 
     Returns [(left, right, pair_count), ...] in merge order."""
     vocab = words.select(
@@ -101,7 +102,7 @@ def learn_bpe(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["pair_count"] < min_count:
+        if not best or best[0]["pair_count"] < 2:
             break
         left, right, cnt = (
             best[0]["left"],
@@ -118,7 +119,7 @@ def learn_bpe(
 
 
 def apply_bpe(
-    words: DataFrame, merges: list[tuple[str, str, int]], word_col: str = "word"
+    words: DataFrame, merges: list[tuple[str, str, int]]
 ) -> DataFrame:
     """Encode words with a learned merge list: the merge sequence is
     replayed in order over the symbol arrays (same greedy fold as
@@ -128,7 +129,7 @@ def apply_bpe(
     Scale: run this on the DISTINCT word table (vocab-sized, Zipf-small
     vs the corpus) and broadcast-join the result back to occurrences —
     tokenizing 100 TB costs one vocab-sized compute plus a broadcast."""
-    syms = chars(F.col(word_col))
+    syms = chars(F.col("word"))
     for left, right, _ in merges:
         syms = merge_pair(syms, left, right)
     return words.withColumn("pieces", syms)

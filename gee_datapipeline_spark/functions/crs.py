@@ -185,9 +185,10 @@ def utm_inverse_np(e: np.ndarray, n: np.ndarray, zone: int,
 
 
 def utm_forward_steps(
-    lon_expr: str, lat_expr: str, zone: int, south: bool = False
+    lon_expr: str, lat_expr: str, zone: int
 ) -> list[tuple[str, str]]:
-    """The forward transform as a chain of named portable-SQL steps.
+    """The forward transform to a northern-hemisphere zone (EPSG:326xx,
+    false northing 0) as a chain of named portable-SQL steps.
 
     Each ``(name, expr)`` may reference earlier names. The emitted
     subset (sin/cos/tan/atan2/exp/ln/sqrt/radians/arithmetic) parses and
@@ -201,7 +202,6 @@ def utm_forward_steps(
     (:func:`sql_utm_forward_select`).
     """
     lon0 = utm_zone_lon0(zone)
-    fn = UTM_FN_SOUTH if south else 0.0
     kA = UTM_K0 * _RECT_A
     steps: list[tuple[str, str]] = [
         ("__lam", f"radians(({lon_expr}) - {lon0!r})"),
@@ -245,20 +245,19 @@ def utm_forward_steps(
         # round to mm so JVM-vs-DuckDB libm ulps can never flip a
         # downstream bucket or hash compare
         ("utm_e", f"round({UTM_FE!r} + {kA!r} * __eta, 3)"),
-        ("utm_n", f"round({fn!r} + {kA!r} * __xi, 3)"),
+        ("utm_n", f"round(0.0 + {kA!r} * __xi, 3)"),
     ]
     return steps
 
 
 def sql_utm_forward_select(
-    source_sql: str, lon_expr: str, lat_expr: str, zone: int,
-    south: bool = False
+    source_sql: str, lon_expr: str, lat_expr: str, zone: int
 ) -> str:
     """Wrap ``source_sql`` in a nested-SELECT chain computing
     ``utm_e``/``utm_n`` — the DuckDB mirror of the Spark
     ``withColumn(F.expr(...))`` fold over :func:`utm_forward_steps`."""
     sql = f"SELECT * FROM ({source_sql})"
-    for name, expr in utm_forward_steps(lon_expr, lat_expr, zone, south):
+    for name, expr in utm_forward_steps(lon_expr, lat_expr, zone):
         sql = f"SELECT *, {expr} AS {name} FROM ({sql})"
     return sql
 
@@ -444,11 +443,10 @@ def sinu_inverse_np(x: np.ndarray, y: np.ndarray,
     return lon, np.degrees(phi)
 
 
-def sinu_forward_steps(
-    lon_expr: str, lat_expr: str, radius: float = MODIS_SINU_R
-) -> list[tuple[str, str]]:
-    """Sinusoidal forward as portable SQL (same contract as the UTM and
-    LCC step chains)."""
+def sinu_forward_steps(lon_expr: str, lat_expr: str) -> list[tuple[str, str]]:
+    """Sinusoidal forward on the MODIS sphere as portable SQL (same
+    contract as the UTM and LCC step chains)."""
+    radius = MODIS_SINU_R
     return [
         ("__phi", f"radians({lat_expr})"),
         (
@@ -460,11 +458,10 @@ def sinu_forward_steps(
 
 
 def sql_sinu_forward_select(
-    source_sql: str, lon_expr: str, lat_expr: str,
-    radius: float = MODIS_SINU_R
+    source_sql: str, lon_expr: str, lat_expr: str
 ) -> str:
     sql = f"SELECT * FROM ({source_sql})"
-    for name, expr in sinu_forward_steps(lon_expr, lat_expr, radius):
+    for name, expr in sinu_forward_steps(lon_expr, lat_expr):
         sql = f"SELECT *, {expr} AS {name} FROM ({sql})"
     return sql
 

@@ -22,9 +22,11 @@ distance over the token multiset; banded by 16-bit chunks for the same
 equi-join trick.
 
 Both operators take a ``family`` parameter: ``xxhash64`` (default,
-fastest JVM hash) and ``md5hex`` (cross-engine reproducible — DuckDB's
-md5() emits identical hex, letting the gate queries value-hash the FULL
-LSH pipelines against a SQL mirror). ``tests/test_text_dedup.py``
+fastest JVM hash) or a cross-engine reproducible md5 family — MinHash's
+``md5perm`` (one md5 per shingle, k universal-hash permutations) and
+SimHash's ``md5hex`` (a 60-bit md5 prefix per token). DuckDB's md5()
+emits identical hex, which lets the gate queries value-hash the FULL
+LSH pipelines against a SQL mirror. ``tests/test_text_dedup.py``
 additionally verifies the MinHash Jaccard estimate against the exact
 Jaccard oracle query and the SimHash/LSH recall on constructed
 near-duplicates.
@@ -36,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_NUM_HASHES = 32
-DEFAULT_BANDS = 8  # 8 bands x 4 rows = 32 hashes
+SIMHASH_BANDS = 4  # SimHash band keys per fingerprint
 
 
 # Universal-hash family for the md5perm mode: mh_i = (A_i·h + B_i) mod P
@@ -54,23 +56,6 @@ def mh_perm_constants(num_hashes: int = DEFAULT_NUM_HASHES):
     return a, b
 
 
-def _mh_hash_sql(i: int, col: str, family: str) -> str:
-    """One member of the k-hash family, as a SQL string (one JVM parse
-    instead of several py4j calls per hash member).
-
-    ``xxhash64`` (default) is the fast production path. ``md5hex`` is
-    cross-engine reproducible: DuckDB's md5() emits the identical
-    lowercase hex, and fixed-width lowercase hex compares
-    lexicographically == numerically, so ``min()`` picks the same
-    element in both engines — which is what lets the LSH gate query
-    carry a FULL value-hash oracle instead of a rows-only check."""
-    if family == "xxhash64":
-        return f"xxhash64({i}, {col})"
-    if family == "md5hex":
-        return f"md5(concat('{i}:', {col}))"
-    raise ValueError(f"unknown hash family: {family}")
-
-
 def minhash_signatures_df(
     shingle_rows: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
@@ -79,8 +64,11 @@ def minhash_signatures_df(
     """Signatures from (doc_id, shingle) rows via a 32-way min
     hash-aggregate (codegen'd, map-side partial aggregation; the shuffle
     carries one 32-long row per doc per input partition). Returns
-    (doc_id, sig array<long>) — array<string> for ``family="md5hex"``.
-    Input comes from ``functions.text.shingles_df``.
+    (doc_id, sig array<long>). Input comes from
+    ``functions.text.shingles_df``.
+
+    ``family="xxhash64"`` (default) is the fast production path: member
+    i is ``xxhash64(i, shingle)``.
 
     ``family="md5perm"`` hashes each shingle ONCE (32-bit md5 prefix)
     and derives the k family members as universal-hash permutations
@@ -109,15 +97,15 @@ def minhash_signatures_df(
                 for i in range(num_hashes)
             ]
         )
-    else:
+    elif family == "xxhash64":
         mins = shingle_rows.groupBy("doc_id").agg(
             *[
-                F.expr(f"min({_mh_hash_sql(i, 'shingle', family)})").alias(
-                    f"mh{i}"
-                )
+                F.expr(f"min(xxhash64({i}, shingle))").alias(f"mh{i}")
                 for i in range(num_hashes)
             ]
         )
+    else:
+        raise ValueError(f"unknown hash family: {family}")
     return mins.select(
         "doc_id",
         F.expr(
@@ -126,11 +114,7 @@ def minhash_signatures_df(
     )
 
 
-def lsh_bands(
-    sig: str,
-    num_bands: int = DEFAULT_BANDS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> Column:
+def lsh_bands(sig: str, num_bands: int, num_hashes: int) -> Column:
     """Hash each band (contiguous slice of the signature column named
     ``sig``) to one bucket key.
 
@@ -169,30 +153,20 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: Column,
     threshold: float = 0.5,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
     family: str = "xxhash64",
 ) -> DataFrame:
-    """Candidate near-dup pairs with estimated Jaccard >= threshold.
+    """Candidate near-dup pairs with estimated Jaccard >= threshold,
+    from word-3-gram shingles and ``DEFAULT_NUM_HASHES`` minhashes.
 
-    ``num_bands=None`` (default) derives the band count from the
-    S-curve via :func:`pick_bands_rows`, so the banding tracks the
-    requested threshold instead of a hand-tuned constant (at the
-    defaults, 0.5 → 8×4 — unchanged from the historical value).
+    The band count derives from the S-curve via :func:`pick_bands_rows`,
+    so the banding tracks the requested threshold instead of a
+    hand-tuned constant (0.5 → 8×4).
 
     Plan: shingle rows (codegen, shuffle-parallel) → 32-way min
     aggregate → band explode → self equi-join on (band_id, band_hash) →
     distinct pairs → signature agreement filter. The band join replaces
     the all-pairs cross product; candidate count is driven by the
     (b, r) S-curve, not n²."""
-    from .text import shingles_df
-
-    if num_bands is None:
-        num_bands, _ = pick_bands_rows(threshold, num_hashes)
-    sh = shingles_df(docs, id_col, text_col, shingle_n)
-    sigs = minhash_signatures_df(sh, num_hashes, family)
-
     # Signatures ride along through the band join (they're k longs per
     # row — cheap) so no extra join recomputes them; the two join sides
     # are identical subplans, which Spark's ReuseExchange shares.
@@ -200,11 +174,7 @@ def minhash_lsh_pairs(
     # 2.30 s at sf0.1 — the blocking materialization costs more than
     # the duplicated signature build it saves — so the lazy form
     # deliberately stands.)
-    banded = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(lsh_bands("sig", num_bands, num_hashes)).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
+    banded = banded_signatures(docs, id_col, text_col, family, threshold)
 
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -235,20 +205,19 @@ def banded_signatures(
     docs: DataFrame,
     id_col: str,
     text_col: Column,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
-    family: str = "xxhash64",
-    threshold: float = 0.5,
+    family: str,
+    threshold: float,
 ) -> DataFrame:
     """Banded MinHash signatures: one row per (doc, band) with the full
-    signature carried alongside — both join sides of
-    :func:`minhash_incremental_pairs`."""
+    signature carried alongside — the join sides of
+    :func:`minhash_lsh_pairs` and :func:`minhash_incremental_pairs`.
+    Word-3-gram shingles, ``DEFAULT_NUM_HASHES`` minhashes, bands from
+    :func:`pick_bands_rows`."""
     from .text import shingles_df
 
-    if num_bands is None:
-        num_bands, _ = pick_bands_rows(threshold, num_hashes)
-    sh = shingles_df(docs, id_col, text_col, shingle_n)
+    num_hashes = DEFAULT_NUM_HASHES
+    num_bands, _ = pick_bands_rows(threshold, num_hashes)
+    sh = shingles_df(docs, id_col, text_col, 3)
     sigs = minhash_signatures_df(sh, num_hashes, family)
     return sigs.select(
         "doc_id",
@@ -265,9 +234,6 @@ def minhash_incremental_pairs(
     id_col: str,
     text_col: Column,
     threshold: float = 0.5,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    num_bands: int | None = None,
-    shingle_n: int = 3,
     family: str = "xxhash64",
 ) -> DataFrame:
     """Incremental near-dup: match a NEW BATCH against an EXISTING
@@ -287,26 +253,10 @@ def minhash_incremental_pairs(
     duplicated here.
     """
     c = banded_signatures(
-        corpus,
-        id_col,
-        text_col,
-        num_hashes,
-        num_bands,
-        shingle_n,
-        family,
-        threshold,
+        corpus, id_col, text_col, family, threshold
     ).alias("c")
     b = F.broadcast(
-        banded_signatures(
-            batch,
-            id_col,
-            text_col,
-            num_hashes,
-            num_bands,
-            shingle_n,
-            family,
-            threshold,
-        )
+        banded_signatures(batch, id_col, text_col, family, threshold)
     ).alias("b")
     cand = (
         c.join(
@@ -334,40 +284,6 @@ def minhash_incremental_pairs(
 # ------------------------------------------------------------- SimHash
 
 
-def simhash64(tokens_arr: Column, num_bits: int = 64) -> Column:
-    """64-bit SimHash of a token array.
-
-    For each bit b: sum over token hashes of (+1 if bit b set else -1);
-    fingerprint bit b is 1 iff the sum is positive. The token array is
-    hashed once (``transform``), then each bit's vote is one ``aggregate``
-    over the hash array — all JVM-side, per-row, no shuffle. Bit indices
-    are compile-time constants (shift amounts must be Python ints), so
-    the expression is built with a Python loop, not a SQL lambda."""
-    hashes = F.transform(tokens_arr, lambda t: F.xxhash64(t))
-
-    # NB: the bit index must be captured via a closure, not a lambda
-    # default arg — PySpark introspects lambda arity and would turn the
-    # extra parameter into a phantom higher-order-function variable.
-    def vote(b: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1),
-        )
-
-    fp = F.lit(0).cast("long")
-    for b in range(num_bits):
-        fp = fp.bitwiseOR(
-            F.when(
-                vote(b) > 0, F.shiftleft(F.lit(1).cast("long"), b)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return fp
-
-
 def simhash_df(
     docs: DataFrame,
     id_col: str,
@@ -375,9 +291,11 @@ def simhash_df(
     num_bits: int = 64,
     family: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash via explode → per-bit vote-sum hash-aggregates
-    (codegen'd; the scalable pipeline form of :func:`simhash64`).
-    Returns (doc_id, fp long). Docs with no tokens are dropped (no
+    """64-bit SimHash of each doc's token array. For each bit b the
+    vote is the sum over token hashes of (+1 if bit b set else -1); the
+    fingerprint bit b is 1 iff the vote is positive. Computed as
+    explode → per-bit vote-sum hash-aggregates (codegen'd, no per-row
+    lambdas). Returns (doc_id, fp long). Docs with no tokens are dropped (no
     content).
 
     ``family="md5hex"`` derives the token hash from the first 15 hex
@@ -454,11 +372,12 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_bands(fp: Column, num_bands: int = 4, num_bits: int = 64) -> Column:
-    """Split a fingerprint into ``num_bits // num_bands``-wide band
-    keys: two docs within Hamming distance (num_bands - 1) share at
-    least one band exactly (pigeonhole) — the standard SimHash blocking
-    scheme."""
+def simhash_bands(fp: Column, num_bits: int) -> Column:
+    """Split a fingerprint into ``SIMHASH_BANDS`` band keys of
+    ``num_bits // SIMHASH_BANDS`` bits: two docs within Hamming distance
+    ``SIMHASH_BANDS - 1`` share at least one band exactly (pigeonhole)
+    — the standard SimHash blocking scheme."""
+    num_bands = SIMHASH_BANDS
     width = num_bits // num_bands
     mask = (1 << width) - 1
     return F.array(
@@ -479,17 +398,16 @@ def simhash_pairs(
     id_col: str,
     tokens_col: Column,
     max_hamming: int = 3,
-    num_bands: int = 4,
     num_bits: int = 64,
     family: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band-bucket equi-join then exact
-    Hamming filter. Guaranteed recall for distance <= num_bands - 1."""
+    Hamming filter. Guaranteed recall for distance <= SIMHASH_BANDS - 1."""
     fps = simhash_df(docs, id_col, tokens_col, num_bits, family)
     banded = fps.select(
         "doc_id",
         "fp",
-        F.explode(simhash_bands(F.col("fp"), num_bands, num_bits)).alias("b"),
+        F.explode(simhash_bands(F.col("fp"), num_bits)).alias("b"),
     ).select("doc_id", "fp", "b.band_id", "b.band_key")
     a, b = banded.alias("a"), banded.alias("b")
     return (

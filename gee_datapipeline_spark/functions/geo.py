@@ -147,16 +147,12 @@ def proximity_join(
     pixels: DataFrame,
     points: DataFrame,
     radius_km: float,
-    pixel_lon: str = "lon",
-    pixel_lat: str = "lat",
-    point_lon: str = "lon",
-    point_lat: str = "lat",
-    broadcast_points: bool = True,
     lat_cap_deg: float = 66.0,
     distance_round: int | None = None,
 ) -> DataFrame:
     """J2 — pixels within ``radius_km`` of any point (the power-plant
-    overlay, DataDownloader_V2.py:96-102, made queryable).
+    overlay, DataDownloader_V2.py:96-102, made queryable). Both sides
+    carry ``lon``/``lat``; the exploded point side is broadcast.
 
     Grid-bucketed: cell sizes are chosen >= radius in degrees per axis
     IN THE HAVERSINE METRIC (``KM_PER_DEG`` km per degree of latitude on
@@ -176,21 +172,17 @@ def proximity_join(
     cell_lat_deg, cell_lon_deg = _cell_sizes(radius_km, lat_cap_deg)
     px = pixels.withColumn(
         "__cell",
-        grid_cell(
-            F.col(pixel_lon), F.col(pixel_lat), cell_lon_deg, cell_lat_deg
-        ),
+        grid_cell(F.col("lon"), F.col("lat"), cell_lon_deg, cell_lat_deg),
     )
     pt = points.withColumn(
         "__cell",
         F.explode(
             neighbor_cells(
-                F.col(point_lon), F.col(point_lat), cell_lon_deg, cell_lat_deg
+                F.col("lon"), F.col("lat"), cell_lon_deg, cell_lat_deg
             )
         ),
     )
-    if broadcast_points:
-        pt = F.broadcast(pt)
-    pl, pr = F.col(pixel_lon), F.col(pixel_lat)
+    pt = F.broadcast(pt)
     # Points carry possibly-colliding column names; alias them.
     pt = pt.select(
         F.col("__cell"),
@@ -202,7 +194,7 @@ def proximity_join(
     )
     joined = px.join(pt, on="__cell", how="inner")
     dist = haversine_km(
-        pl, pr, F.col(f"pt_{point_lon}"), F.col(f"pt_{point_lat}")
+        F.col("lon"), F.col("lat"), F.col("pt_lon"), F.col("pt_lat")
     )
     if distance_round is not None:
         dist = F.round(dist, distance_round)
@@ -455,9 +447,6 @@ def line_proximity_pairs(
     pixels: DataFrame,
     segments: DataFrame,
     radius_km: float,
-    pixel_lon: str = "lon",
-    pixel_lat: str = "lat",
-    broadcast_segments: bool = True,
     lat_cap_deg: float = 66.0,
 ) -> DataFrame:
     """Pair-level (pixel, segment) candidates of the point-to-line
@@ -481,11 +470,9 @@ def line_proximity_pairs(
 
     Scale: the exploded segment side stays dimension-sized for road
     networks (|segments| x ~9 cells) and broadcasts; the pixel/fact
-    side shuffles ZERO times (map-side hash probe). With
-    ``broadcast_segments=False`` both sides shuffle on the cell id —
-    the fallback when the road network itself is fact-sized. The join
-    is STATELESS, which is what makes it legal on an unbounded stream
-    (stream-static broadcast enrich)."""
+    side (``lon``/``lat`` columns) shuffles ZERO times (map-side hash
+    probe). The join is STATELESS, which is what makes it legal on an
+    unbounded stream (stream-static broadcast enrich)."""
     # sphere-metric cell sizing (see _cell_sizes / CELL_MARGIN), then
     # the exact-tiling lon grid (see grid_cell): effective width >= the
     # radius-derived request, count divides 360 so pmod wrap is sound
@@ -500,8 +487,8 @@ def line_proximity_pairs(
 
     px = pixels.withColumn(
         "__cell",
-        cy_of(F.col(pixel_lat)) * F.lit(cols)
-        + F.pmod(cx_of(F.col(pixel_lon)), F.lit(cols)),
+        cy_of(F.col("lat")) * F.lit(cols)
+        + F.pmod(cx_of(F.col("lon")), F.lit(cols)),
     )
     # Antimeridian discipline (r10, replacing the r9 loud reject): a
     # segment whose raw endpoints span more than 180 deg of longitude
@@ -541,10 +528,9 @@ def line_proximity_pairs(
             "lon1", "lat1", "lon2", "lat2",
         )
     )
-    if broadcast_segments:
-        seg = F.broadcast(seg)
+    seg = F.broadcast(seg)
     dist = point_to_segment_km(
-        F.col(pixel_lon), F.col(pixel_lat), lo1, la1, lo2, la2
+        F.col("lon"), F.col("lat"), lo1, la1, lo2, la2
     )
     return (
         px.join(seg, on="__cell", how="inner")
@@ -557,9 +543,6 @@ def proximity_join_lines(
     pixels: DataFrame,
     segments: DataFrame,
     radius_km: float,
-    pixel_lon: str = "lon",
-    pixel_lat: str = "lat",
-    broadcast_segments: bool = True,
     lat_cap_deg: float = 66.0,
     distance_round: int | None = None,
 ) -> DataFrame:
@@ -573,9 +556,7 @@ def proximity_join_lines(
     :func:`line_proximity_pairs` collapse in the min-aggregate, with
     map-side partial min before the single pair-keyed shuffle)."""
     pairs = line_proximity_pairs(
-        pixels, segments, radius_km,
-        pixel_lon=pixel_lon, pixel_lat=pixel_lat,
-        broadcast_segments=broadcast_segments, lat_cap_deg=lat_cap_deg,
+        pixels, segments, radius_km, lat_cap_deg=lat_cap_deg
     )
     joined = pairs.groupBy(*pixels.columns, "pt_feature_id").agg(
         F.min("distance_km").alias("distance_km")
@@ -587,11 +568,17 @@ def proximity_join_lines(
     return joined.filter(F.col("distance_km") <= radius_km)
 
 
-def z_order_key(x: Column, y: Column, bits: int = 16) -> Column:
+# Bits per axis of the Morton key (a 32-bit Z-code from two 16-bit
+# grid indices); the DuckDB mirror in plans.geo_queries reads it too.
+Z_ORDER_BITS = 16
+
+
+def z_order_key(x: Column, y: Column) -> Column:
     """Morton (Z-order) interleave of two grid indices — the sort key
     that keeps 2-D-adjacent pixels adjacent in file order, so row-group
     min/max statistics prune spatial ranges inside each partition.
     Built from static shift/mask ops (codegen'd)."""
+    bits = Z_ORDER_BITS
     xl = x.cast("long").bitwiseAND(F.lit((1 << bits) - 1))
     yl = y.cast("long").bitwiseAND(F.lit((1 << bits) - 1))
     key = F.lit(0).cast("long")
@@ -707,9 +694,7 @@ def make_point_in_polygon_udf(polygon):
     return pip
 
 
-def clip_to_polygon(
-    pixels: DataFrame, polygon, lon: str = "lon", lat: str = "lat"
-) -> DataFrame:
+def clip_to_polygon(pixels: DataFrame, polygon) -> DataFrame:
     """J1 — clip: bbox prefilter (pushdown-able) + exact ray-cast test.
     ``polygon`` may be any shape ``_parse_rings`` accepts (single ring,
     multi-ring with holes, MultiPolygon); the bbox prefilter is the
@@ -720,9 +705,9 @@ def clip_to_polygon(
     pip = make_point_in_polygon_udf(polygon)
     return pixels.filter(
         bbox_contains(
-            F.col(lon), F.col(lat), lo_lon, lo_lat, hi_lon, hi_lat
+            F.col("lon"), F.col("lat"), lo_lon, lo_lat, hi_lon, hi_lat
         )
-    ).filter(pip(F.col(lon), F.col(lat)))
+    ).filter(pip(F.col("lon"), F.col("lat")))
 
 
 # --------------------------------------------------- exact dissolve (A6)
@@ -756,9 +741,7 @@ def make_point_in_union_udf(geometries):
     return piu
 
 
-def clip_to_union(
-    pixels: DataFrame, geometries, lon: str = "lon", lat: str = "lat"
-) -> DataFrame:
+def clip_to_union(pixels: DataFrame, geometries) -> DataFrame:
     """Clip to the dissolved union of several geometries: bbox
     prefilter on the union envelope (pushdown-able), then the exact
     any-member ray-cast test. Covers every reference use of the
@@ -770,9 +753,9 @@ def clip_to_union(
     piu = make_point_in_union_udf(geometries)
     return pixels.filter(
         bbox_contains(
-            F.col(lon), F.col(lat), lo_lon, lo_lat, hi_lon, hi_lat
+            F.col("lon"), F.col("lat"), lo_lon, lo_lat, hi_lon, hi_lat
         )
-    ).filter(piu(F.col(lon), F.col(lat)))
+    ).filter(piu(F.col("lon"), F.col("lat")))
 
 
 def rect_union_area(

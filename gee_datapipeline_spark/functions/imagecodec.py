@@ -40,8 +40,8 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
 
 
-def encode_png(arr: np.ndarray, compress_level: int = 6) -> bytes:
-    """uint8 array (H,W) | (H,W,3) | (H,W,4) → PNG bytes."""
+def encode_png(arr: np.ndarray) -> bytes:
+    """uint8 array (H,W) | (H,W,3) | (H,W,4) → PNG bytes (zlib level 6)."""
     a = np.ascontiguousarray(arr)
     if a.dtype != np.uint8:
         raise ValueError(f"encode_png wants uint8, got {a.dtype}")
@@ -60,7 +60,7 @@ def encode_png(arr: np.ndarray, compress_level: int = 6) -> bytes:
     raw = np.empty((h, 1 + w * channels), dtype=np.uint8)
     raw[:, 0] = 0
     raw[:, 1:] = a.reshape(h, w * channels)
-    idat = zlib.compress(raw.tobytes(), compress_level)
+    idat = zlib.compress(raw.tobytes(), 6)
     return (
         _PNG_MAGIC
         + _chunk(b"IHDR", ihdr)

@@ -153,12 +153,7 @@ def plane_matrix_int(dim: int, num_tables: int, num_planes: int):
 
 
 def hyperplane_buckets_pdf(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    num_tables: int = 8,
-    num_planes: int = 4,
-    quantized: bool = False,
+    vectors: DataFrame, num_tables: int, num_planes: int, quantized: bool
 ) -> DataFrame:
     """Bucket ids via ONE Arrow-batched matrix multiply per partition.
 
@@ -167,11 +162,11 @@ def hyperplane_buckets_pdf(
     Catalyst aggregates (measured 3.4 s → ~0.2 s for 2 000 × 64 at 32
     planes, against a 32-sum posexplode + groupBy form). Narrow:
     buckets are computed where the vector partition lives, no shuffle.
-    Returns (id, table_id, bucket), one row per table."""
+    Returns (vec_id, table_id, bucket), one row per table."""
     import numpy as np
     import pandas as pd
 
-    schema = f"{id_col} long, table_id int, bucket long"
+    schema = "vec_id long, table_id int, bucket long"
 
     def run(batches):
         planes = None
@@ -179,7 +174,7 @@ def hyperplane_buckets_pdf(
             if len(pdf) == 0:
                 continue
             embs = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf[emb_col]]
+                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
             )
             if planes is None:
                 planes = (
@@ -194,10 +189,10 @@ def hyperplane_buckets_pdf(
             buckets = (
                 bits.reshape(len(pdf), num_tables, num_planes) @ weights
             )  # N × T
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(ids, num_tables),
+                    "vec_id": np.repeat(ids, num_tables),
                     "table_id": np.tile(
                         np.arange(num_tables, dtype=np.int32), len(pdf)
                     ),
@@ -205,7 +200,7 @@ def hyperplane_buckets_pdf(
                 }
             )
 
-    return vectors.select(id_col, emb_col).mapInPandas(run, schema)
+    return vectors.select("vec_id", "embedding").mapInPandas(run, schema)
 
 
 # ------------------------------------------------------ IVF (scale path #2)
@@ -437,16 +432,14 @@ def ivf_assign(
 def ann_ivf_topk(
     vectors: DataFrame,
     probes: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    lloyd_iters: int = 1,
     exact: bool = False,
     quantizer: DataFrame | None = None,
 ) -> DataFrame:
-    """Approximate top-k cosine neighbors via IVF coarse quantization.
+    """Approximate top-k cosine neighbors via IVF coarse quantization,
+    over ``(vec_id, embedding)`` rows on both sides.
 
     One quantizer, trained on the base vectors (or passed pre-trained
     via ``quantizer``, e.g. one :func:`ivf_centroids` table shared by
@@ -462,21 +455,21 @@ def ann_ivf_topk(
 
     if quantizer is None:
         quantizer = ivf_centroids(
-            vectors, id_col, emb_col, n_centroids, lloyd_iters, exact=exact
+            vectors, n_centroids=n_centroids, lloyd_iters=1, exact=exact
         )
     cells = ivf_assign(
-        vectors, quantizer, id_col, emb_col, n_probe=1, exact=exact
+        vectors, quantizer, n_probe=1, exact=exact
     ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("c_emb"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
         F.col("norm").alias("c_norm"),
         "cid",
     )
     probe_cells = ivf_assign(
-        probes, quantizer, id_col, emb_col, n_probe=n_probe, exact=exact
+        probes, quantizer, n_probe=n_probe, exact=exact
     ).select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
         "cid",
     )
@@ -504,8 +497,6 @@ def ann_ivf_topk(
 def ann_lsh_topk(
     vectors: DataFrame,
     probes: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     k: int = 10,
     num_tables: int = 8,
     num_planes: int = 4,
@@ -513,7 +504,7 @@ def ann_lsh_topk(
     quantized: bool = False,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via multi-table hyperplane LSH
-    with Hamming-1 multi-probe.
+    with Hamming-1 multi-probe, over ``(vec_id, embedding)`` rows.
 
     Plan: bucket via the codegen'd aggregate path → equi-join on
     (table_id, bucket) → distinct candidate pairs → exact cosine
@@ -533,13 +524,13 @@ def ann_lsh_topk(
         df: DataFrame, id_alias: str, emb_alias: str, fanout: bool
     ) -> DataFrame:
         base = df.select(
-            F.col(id_col).alias(id_alias),
-            F.col(emb_col).alias(emb_alias),
-            F.sqrt(sq_norm(F.col(emb_col))).alias(f"{id_alias}_norm"),
+            F.col("vec_id").alias(id_alias),
+            F.col("embedding").alias(emb_alias),
+            F.sqrt(sq_norm(F.col("embedding"))).alias(f"{id_alias}_norm"),
         )
         buckets = hyperplane_buckets_pdf(
-            df, id_col, emb_col, num_tables, num_planes, quantized
-        ).withColumnRenamed(id_col, id_alias)
+            df, num_tables, num_planes, quantized
+        ).withColumnRenamed("vec_id", id_alias)
         if fanout and probe_bits >= 1:
             variants = F.array(
                 F.col("bucket"),
@@ -622,11 +613,10 @@ def knn_join_ivf(
     k: int = 5,
     n_probe: int = 2,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     quantizer: DataFrame | None = None,
 ) -> DataFrame:
-    """Full kNN JOIN: top-k quantized-cosine neighbors for EVERY vector
+    """Full kNN JOIN: top-k quantized-cosine neighbors for EVERY
+    ``(vec_id, embedding)`` row
     (the retrieval-corpus build behind kNN-LM / RETRO — not a probe-set
     query like :func:`ann_ivf_topk`, which answers for a handful of
     external probes).
@@ -656,18 +646,16 @@ def knn_join_ivf(
         quantizer
         if quantizer is not None
         else ivf_centroids(
-            vectors, id_col, emb_col, n_centroids, lloyd_iters=1, exact=True
+            vectors, n_centroids=n_centroids, lloyd_iters=1, exact=True
         ),
-        id_col,
-        emb_col,
         n_probe=n_probe,
         exact=True,
     )
     tagged = assign.select(
         "cid",
         F.col("c_rank"),
-        F.col(id_col).alias("vid"),
-        F.col(emb_col).alias("emb"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("emb"),
     )
 
     out_schema = "q_id long, neighbor_id long, sim double"

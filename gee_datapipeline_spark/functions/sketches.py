@@ -40,23 +40,21 @@ def _base_hash(term: Column) -> Column:
     return F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("long")
 
 
-def cms_bucket(term: Column, depth_i: int, width: int = CMS_WIDTH) -> Column:
+def cms_bucket(term: Column, depth_i: int) -> Column:
     """Row-``depth_i`` bucket for a term."""
     a, b = mh_perm_constants(CMS_DEPTH)
     return (
         (F.lit(a[depth_i]) * _base_hash(term) + F.lit(b[depth_i]))
         % F.lit(MH_PERM_P)
-    ) % F.lit(width)
+    ) % F.lit(CMS_WIDTH)
 
 
 def cms_build(
     terms: DataFrame,
-    term_col: str = "term",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Build the sketch matrix from one row per term OCCURRENCE — or,
+    """Build the ``CMS_DEPTH`` x ``CMS_WIDTH`` sketch matrix from one
+    row per ``term`` OCCURRENCE — or,
     with ``weight_col``, from pre-aggregated (term, count) rows: a cell
     then sums the weights of the terms hashing to it, which is
     bit-identical to counting the raw occurrences (CMS increments are
@@ -66,7 +64,7 @@ def cms_build(
 
     Returns (depth, bucket, cnt) — at most depth·width rows."""
     buckets = F.array(
-        *[cms_bucket(F.col(term_col), i, width) for i in range(depth)]
+        *[cms_bucket(F.col("term"), i) for i in range(CMS_DEPTH)]
     )
     cnt = (
         F.sum(weight_col) if weight_col is not None else F.count(F.lit(1))
@@ -84,11 +82,8 @@ def cms_build(
 def cms_estimate(
     sketch: DataFrame,
     candidates: DataFrame,
-    term_col: str = "term",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
 ) -> DataFrame:
-    """Point-estimate each candidate term's frequency: min over the d
+    """Point-estimate each candidate ``term``'s frequency: min over the d
     matrix cells the term hashes to. The candidate side is tiny (it's a
     heavy-hitter shortlist) and broadcasts; the join is equi on
     (depth, bucket) against the ≤ d·w-row matrix.
@@ -98,14 +93,14 @@ def cms_estimate(
     ``coalesce(cnt, 0)``. An inner join would over-estimate (min over
     fewer cells) or silently drop terms whose every cell is empty."""
     buckets = F.array(
-        *[cms_bucket(F.col(term_col), i, width) for i in range(depth)]
+        *[cms_bucket(F.col("term"), i) for i in range(CMS_DEPTH)]
     )
     probes = candidates.select(
-        term_col, F.posexplode(buckets).alias("depth", "bucket")
+        "term", F.posexplode(buckets).alias("depth", "bucket")
     )
     return (
         probes.join(F.broadcast(sketch), ["depth", "bucket"], "left")
-        .groupBy(term_col)
+        .groupBy("term")
         .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("cms_estimate"))
     )
 
@@ -119,7 +114,7 @@ def sql_base_hash(term_expr: str) -> str:
     )
 
 
-def sql_bucket(depth_i: int, width: int = CMS_WIDTH) -> str:
+def sql_bucket(depth_i: int) -> str:
     """DuckDB mirror of :func:`cms_bucket` over a column named __h."""
     a, b = mh_perm_constants(CMS_DEPTH)
-    return f"(({a[depth_i]} * __h + {b[depth_i]}) % {MH_PERM_P}) % {width}"
+    return f"(({a[depth_i]} * __h + {b[depth_i]}) % {MH_PERM_P}) % {CMS_WIDTH}"

@@ -55,12 +55,12 @@ def _floor_round(c: Column, scale: int) -> Column:
     return F.floor(c * f + F.lit(0.5)) / f
 
 
-def stable_sum(col: Column | str, scale: int = 2, dec: str = DECIMAL) -> Column:
+def stable_sum(col: Column | str, scale: int = 2) -> Column:
     """Order-independent SUM of a double expression, rounded to `scale`
     in the midpoint-safe floor form. Negative sums round halves toward
     +inf — see :func:`stable_round` for the signed-tie convention."""
     c = F.col(col) if isinstance(col, str) else col
-    return _floor_round(F.sum(c.cast(dec)).cast("double"), scale)
+    return _floor_round(F.sum(c.cast(DECIMAL)).cast("double"), scale)
 
 
 def stable_avg(col: Column | str, scale: int = 6, dec: str = DECIMAL) -> Column:
@@ -72,7 +72,7 @@ def stable_avg(col: Column | str, scale: int = 6, dec: str = DECIMAL) -> Column:
     )
 
 
-def sql_stable_sum(expr: str, scale: int = 2, dec: str = DECIMAL) -> str:
+def sql_stable_sum(expr: str, scale: int = 2) -> str:
     """Mirror of :func:`stable_sum` in portable SQL (several queries run
     the same string in BOTH engines). The terminal double cast matters:
     Spark parses ``100.0`` as DECIMAL, so ``floor(..)/100.0`` would be
@@ -82,7 +82,7 @@ def sql_stable_sum(expr: str, scale: int = 2, dec: str = DECIMAL) -> str:
     quotient)."""
     f = 10**scale
     return (
-        f"cast(floor(cast(sum(cast(({expr}) as {dec})) as double)"
+        f"cast(floor(cast(sum(cast(({expr}) as {DECIMAL})) as double)"
         f" * {f}.0 + 0.5) / {f}.0 as double)"
     )
 

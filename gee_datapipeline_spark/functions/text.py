@@ -79,13 +79,14 @@ def pii_counts(text: Column) -> tuple[Column, Column]:
     )
 
 
-def shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (the MinHash/Jaccard input unit).
+def shingles(toks: Column) -> Column:
+    """Distinct word 3-gram shingles (the MinHash/Jaccard input unit).
 
     PERFORMANCE: higher-order functions are interpreted (CodegenFallback)
     — fine for small/ad-hoc inputs, but the pipeline path is
     :func:`shingles_df` (posexplode + window lead), which is codegen'd
     end-to-end and parallelizes across the shuffle."""
+    n = 3
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     gram = F.transform(
         idx,
@@ -133,8 +134,8 @@ def _in_set(x: Column, words: tuple[str, ...]) -> Column:
     return cond
 
 
-def stopword_count(toks: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(toks, lambda x: _in_set(x, words))).cast("long")
+def stopword_count(toks: Column) -> Column:
+    return F.size(F.filter(toks, lambda x: _in_set(x, STOPWORDS))).cast("long")
 
 
 def punct_ratio(text: Column, scale: int = 6) -> Column:
@@ -159,9 +160,10 @@ def avg_token_len(text: Column, scale: int = 6) -> Column:
     return stable_round(non_ws / token_count(text), scale)
 
 
-def quality_score(text: Column, scale: int = 6) -> Column:
+def quality_score(text: Column) -> Column:
     """Composite quality heuristic: stopword density + moderate token
-    length + low punctuation. Deterministic double arithmetic."""
+    length + low punctuation, rounded to 6 decimals. Deterministic
+    double arithmetic."""
     from .stable import stable_round
 
     toks = tokens(text)
@@ -169,7 +171,7 @@ def quality_score(text: Column, scale: int = 6) -> Column:
     len_term = F.least(avg_token_len(text, 12) / F.lit(10.0), F.lit(1.0))
     return stable_round(
         0.4 * sw_ratio + 0.3 * len_term + 0.3 * (1.0 - punct_ratio(text, 12)),
-        scale,
+        6,
     )
 
 

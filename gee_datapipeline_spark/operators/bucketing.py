@@ -70,10 +70,9 @@ def bucketed_table(
     base_name: str,
     bucket_col: str,
     fingerprint_cols: tuple[str, ...],
-    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
-    """Return ``df`` as a bucketed catalog table, laying it out on first
-    use.
+    """Return ``df`` as a bucketed catalog table (``N_BUCKETS`` buckets
+    on ``bucket_col``), laying it out on first use.
 
     The table name embeds the corpus fingerprint, so a data change never
     serves a stale layout — it simply creates a new table. Within a
@@ -87,7 +86,7 @@ def bucketed_table(
     """
     spark: SparkSession = df.sparkSession
     fp = corpus_fingerprint(df, *fingerprint_cols)
-    name = f"{base_name}_b{n_buckets}_{fp}"
+    name = f"{base_name}_b{N_BUCKETS}_{fp}"
     path = os.path.join(_artifact_root(), name)
     if not spark.catalog.tableExists(name):
         if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -104,11 +103,11 @@ def bucketed_table(
                 f"CREATE TABLE `{name}` ({cols_ddl}) USING parquet "
                 f"CLUSTERED BY (`{bucket_col}`) "
                 f"SORTED BY (`{bucket_col}`) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+                f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}'"
             )
         else:
             (
-                df.write.bucketBy(n_buckets, bucket_col)
+                df.write.bucketBy(N_BUCKETS, bucket_col)
                 .sortBy(bucket_col)
                 .mode("overwrite")
                 .format("parquet")
@@ -130,16 +129,13 @@ def colocated_join(
     right_key: str,
     left_fp_cols: tuple[str, ...],
     right_fp_cols: tuple[str, ...],
-    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """Equi-join two tables through matching bucketed layouts: both
-    sides land in ``n_buckets`` buckets on their join key, so the
+    sides land in ``N_BUCKETS`` buckets on their join key, so the
     SortMergeJoin consumes co-located buckets with no Exchange on
     either input (asserted in ``tests/test_bucketed_join.py``)."""
-    lb = bucketed_table(left, left_name, left_key, left_fp_cols, n_buckets)
-    rb = bucketed_table(
-        right, right_name, right_key, right_fp_cols, n_buckets
-    )
+    lb = bucketed_table(left, left_name, left_key, left_fp_cols)
+    rb = bucketed_table(right, right_name, right_key, right_fp_cols)
     # merge hint: this operator exists for fact⋈fact joins where
     # neither side broadcasts. Without it, small test inputs make
     # Catalyst pick a BroadcastHashJoin and mark the scans

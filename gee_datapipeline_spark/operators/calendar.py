@@ -18,10 +18,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def date_spine_from(
-    df: DataFrame, date_expr: Column, step: str = "interval 1 day", out: str = "date"
-) -> DataFrame:
-    """Dense calendar spine spanning the observed min..max of ``date_expr``.
+def date_spine_from(df: DataFrame, date_expr: Column) -> DataFrame:
+    """Dense daily calendar spine (column ``date``) spanning the observed
+    min..max of ``date_expr``.
 
     The bounds are computed *inside the plan* (a tiny scalar aggregate that
     Spark broadcasts into the sequence generator) — no driver round-trip,
@@ -31,5 +30,5 @@ def date_spine_from(
         F.min(date_expr).alias("lo"), F.max(date_expr).alias("hi")
     )
     return bounds.select(
-        F.explode(F.expr(f"sequence(lo, hi, {step})")).alias(out)
+        F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("date")
     )

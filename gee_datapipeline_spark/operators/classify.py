@@ -35,25 +35,16 @@ def classify_expr(value: Column, std: Column) -> Column:
     )
 
 
-def classify(
-    df: DataFrame,
-    value: str,
-    std: Column | float,
-    out: str = "bucket",
-) -> DataFrame:
-    std_col = F.lit(std) if isinstance(std, (int, float)) else std
-    return df.withColumn(out, classify_expr(F.col(value), std_col))
-
-
 def classify_with_thresholds(
     df: DataFrame,
     thresholds: DataFrame,
     on: str,
     value: str = "value",
-    std_col: str = "std_value",
     out: str = "bucket",
 ) -> DataFrame:
     """Join a thresholds dimension (broadcast — it is datasets-sized) and
-    classify each row against its dataset's standard value."""
+    classify each row against its dataset's ``std_value``."""
     joined = df.join(F.broadcast(thresholds), on=on, how="inner")
-    return joined.withColumn(out, classify_expr(F.col(value), F.col(std_col)))
+    return joined.withColumn(
+        out, classify_expr(F.col(value), F.col("std_value"))
+    )

@@ -26,31 +26,21 @@ from pyspark.sql import functions as F
 from ..functions.stable import stable_avg
 
 
-def mean_composite(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str = "value",
-    out: str = "mean_value",
-    scale: int = 6,
-) -> DataFrame:
-    """A1 — per-key temporal mean (``collection.mean()``,
-    DataDownloader_V1.py:145). Adds an observation count (A3)."""
+def mean_composite(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """A1 — per-key temporal mean of ``value`` as ``mean_value`` (6 dp;
+    ``collection.mean()``, DataDownloader_V1.py:145). Adds an
+    observation count (A3)."""
     return df.groupBy(*keys).agg(
-        stable_avg(value, scale).alias(out),
-        F.count(value).alias("n_obs"),
+        stable_avg("value", 6).alias("mean_value"),
+        F.count("value").alias("n_obs"),
     )
 
 
-def max_composite(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str = "value",
-    out: str = "max_value",
-) -> DataFrame:
-    """A2 — per-key temporal max (``frp_collection.max()``,
-    DataDownloader_SNPP_VIIRS_V1.py:155). Min/max are exact in FP, no
-    stabilization needed."""
-    return df.groupBy(*keys).agg(F.max(value).alias(out))
+def max_composite(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """A2 — per-key temporal max of ``value`` as ``max_value``
+    (``frp_collection.max()``, DataDownloader_SNPP_VIIRS_V1.py:155).
+    Min/max are exact in FP, no stabilization needed."""
+    return df.groupBy(*keys).agg(F.max("value").alias("max_value"))
 
 
 def collection_size(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -59,45 +49,30 @@ def collection_size(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
-def value_bounds(
-    df: DataFrame, keys: Sequence[str], value: str = "value"
-) -> DataFrame:
-    """A5/A8 — global min/max per image, the normalization bounds
-    (``np.nanmin/np.nanmax``, DataDownloader_V1.py:59-60)."""
+def value_bounds(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """A5/A8 — global min/max of ``value`` per image, the normalization
+    bounds (``np.nanmin/np.nanmax``, DataDownloader_V1.py:59-60)."""
     return df.groupBy(*keys).agg(
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
-        F.count(value).alias("n_obs"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        F.count("value").alias("n_obs"),
     )
 
 
-def grid_resample(
-    df: DataFrame,
-    cell_cols: dict[str, Column],
-    value: str = "value",
-    agg: str = "mean",
-    scale: int = 6,
-) -> DataFrame:
+def grid_resample(df: DataFrame, cell_cols: dict[str, Column]) -> DataFrame:
     """A7 — spatial resample: regrid to coarser cells during export
     (``scale=1000``, DataDownloader_V1.py:149). Expressed as a grid-bucket
-    aggregate: ``groupBy(floor(x/k), floor(y/k)).agg(...)``.
+    aggregate: ``groupBy(floor(x/k), floor(y/k))`` with the mean of
+    ``value`` (6 dp) as ``cell_value`` plus ``n_obs``.
 
     ``cell_cols`` maps output column name → bucketing expression. Placing
     this *before* wide operators is the engine's aggregate-pushdown
     (SURVEY.md §4): it shrinks the shuffle by the resample factor squared.
     """
     bucketed = df.select(
-        *[expr.alias(name) for name, expr in cell_cols.items()], F.col(value)
+        *[expr.alias(name) for name, expr in cell_cols.items()], F.col("value")
     )
-    keys = list(cell_cols)
-    if agg == "mean":
-        return bucketed.groupBy(*keys).agg(
-            stable_avg(value, scale).alias("cell_value"),
-            F.count(value).alias("n_obs"),
-        )
-    if agg == "max":
-        return bucketed.groupBy(*keys).agg(
-            F.max(value).alias("cell_value"),
-            F.count(value).alias("n_obs"),
-        )
-    raise ValueError(f"unsupported resample agg {agg!r}")
+    return bucketed.groupBy(*cell_cols).agg(
+        stable_avg("value", 6).alias("cell_value"),
+        F.count("value").alias("n_obs"),
+    )

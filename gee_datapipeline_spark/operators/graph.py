@@ -27,6 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Upper bound on connected_components' star-contraction rounds; the
+# loop normally stops earlier, at the fixpoint (O(log n) rounds).
+CC_MAX_ROUNDS = 25
+
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     """One large- or small-star contraction over symmetric edges.
@@ -68,7 +72,6 @@ def connected_components(
     pairs: DataFrame,
     src: str = "a",
     dst: str = "b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """(src, dst) pair graph → (node bigint, cluster_id bigint).
 
@@ -89,7 +92,7 @@ def connected_components(
 
     cur = _symmetric(edges).localCheckpoint(eager=True)
     stats_prev = _stats(cur)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         after_large = _symmetric(_star_round(cur, large=True))
         after_small = _symmetric(_star_round(after_large, large=False))
         cur = after_small.localCheckpoint(eager=True)

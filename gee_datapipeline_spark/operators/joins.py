@@ -31,12 +31,10 @@ def interval_join(
     facts: DataFrame,
     spine: DataFrame,
     ts_col: str,
-    start_col: str = "month_start",
-    end_col: str = "month_end",
-    broadcast_spine: bool = True,
 ) -> DataFrame:
-    """J4 — attach each fact row to the calendar interval containing it
-    (the monthly-composite attachment of DataDownloader_V2.py:170-183).
+    """J4 — attach each fact row to the calendar interval
+    ``[month_start, month_end]`` of ``spine`` containing it (the
+    monthly-composite attachment of DataDownloader_V2.py:170-183).
 
     The spine is calendar-sized (hundreds of rows), so it broadcasts and
     the range predicate is evaluated map-side — a BroadcastNestedLoopJoin
@@ -44,9 +42,10 @@ def interval_join(
     non-tiny right side, bucketize both sides on ``date_trunc`` first and
     equi-join on the bucket.
     """
-    s = F.broadcast(spine) if broadcast_spine else spine
-    cond = (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(end_col))
-    return facts.join(s, cond, "inner")
+    cond = (F.col(ts_col) >= F.col("month_start")) & (
+        F.col(ts_col) <= F.col("month_end")
+    )
+    return facts.join(F.broadcast(spine), cond, "inner")
 
 
 def value_proximity_join(
@@ -56,14 +55,13 @@ def value_proximity_join(
     left_val: str,
     right_val: str,
     tolerance: float,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """J2 (1-D form) — rows whose values lie within ``tolerance`` after an
-    equi prefilter. The equi keys do the heavy pruning (hash join), the
-    theta predicate is a post-join filter — the same shape as the spatial
-    bbox-prefilter + haversine join."""
-    r = F.broadcast(right) if broadcast_right else right
-    joined = left.join(r, on=list(equi_keys), how="inner")
+    equi prefilter against the broadcast ``right`` side. The equi keys do
+    the heavy pruning (hash join), the theta predicate is a post-join
+    filter — the same shape as the spatial bbox-prefilter + haversine
+    join."""
+    joined = left.join(F.broadcast(right), on=list(equi_keys), how="inner")
     return joined.filter(
         F.abs(F.col(left_val) - F.col(right_val)) <= F.lit(tolerance)
     )

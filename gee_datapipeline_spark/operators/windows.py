@@ -26,11 +26,10 @@ def minmax_normalize(
     df: DataFrame,
     partition_keys: Sequence[str],
     value: str = "value",
-    out: str = "norm_value",
-    scale: int = 6,
     zero_preserving: bool = False,
 ) -> DataFrame:
-    """W1 — per-image min-max normalization.
+    """W1 — per-image min-max normalization of ``value`` into
+    ``norm_value`` (6 dp).
 
     ``zero_preserving=True`` reproduces the FRP variant
     (DataDownloader_SNPP_VIIRS_V1.py:74-82, fix_transparency.py:17-25):
@@ -49,7 +48,7 @@ def minmax_normalize(
     else:
         lo, hi = F.min(v).over(w), F.max(v).over(w)
         norm = (v - lo) / (hi - lo + F.lit(NORMALIZE_EPS))
-    return df.withColumn(out, F.round(norm, scale))
+    return df.withColumn("norm_value", F.round(norm, 6))
 
 
 def blocked_trailing_window(
@@ -128,12 +127,11 @@ def topk_per_group(
     partition_keys: Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_col: str = "rk",
 ) -> DataFrame:
-    """O3 — top-k rows per group. ``order_cols`` must form a deterministic
-    total order (append a unique id as tiebreaker) or results are
-    partition-order dependent."""
+    """O3 — top-k rows per group, ranked 1..k in ``rk``. ``order_cols``
+    must form a deterministic total order (append a unique id as
+    tiebreaker) or results are partition-order dependent."""
     w = Window.partitionBy(*partition_keys).orderBy(*order_cols)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
+    return df.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= k
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import (
+    Z_ORDER_BITS,
     bbox_contains,
     clip_to_polygon,
     clip_to_union,
@@ -1024,10 +1025,11 @@ def _zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_morton(xe: str, ye: str, bits: int = 16) -> str:
+def _sql_morton(xe: str, ye: str) -> str:
     """DuckDB mirror of ``z_order_key``: Σ_b ((x>>b)&1)·4^b·(1 + 2·[y])
     written with multiplication by precomputed powers (exact BIGINT
     arithmetic — no float anywhere, so parity is structural)."""
+    bits = Z_ORDER_BITS
     xm = f"(({xe}) % {1 << bits})"  # mirror of the Spark-side bit mask
     ym = f"(({ye}) % {1 << bits})"
     terms = []

@@ -28,6 +28,8 @@ from .registry import Query, register
 
 N_QUERIES = 5  # vec_id < 5 are the probe vectors
 TOP_K = 10
+EMB_DIM = 64  # width of the embeddings fixture vectors
+LSH_TABLES, LSH_PLANES = 8, 4  # the ann_lsh query's hyperplane LSH shape
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,12 +162,13 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.07 → 1.11 s interleaved — flat-to-negative — reverted.)
     e = _emb(spark, sf_dir)
     probes = e.filter(F.col("vec_id") < N_QUERIES)
-    return ann_lsh_topk(e, probes, k=TOP_K, quantized=True)
+    return ann_lsh_topk(
+        e, probes, k=TOP_K, num_tables=LSH_TABLES, num_planes=LSH_PLANES,
+        quantized=True,
+    )
 
 
-def _ann_lsh_oracle(
-    dim: int = 64, num_tables: int = 8, num_planes: int = 4
-) -> str:
+def _ann_lsh_oracle() -> str:
     """DuckDB mirror of the quantized ann_lsh pipeline. The integer
     plane matrix is emitted as literal rows (one 64-int list per
     (table, plane) projection) from the SAME seeded generator Spark
@@ -174,6 +177,7 @@ def _ann_lsh_oracle(
     is exact and the projection signs match numpy's int64 GEMM."""
     from ..functions.similarity import QUANT_SCALE, plane_matrix_int
 
+    dim, num_tables, num_planes = EMB_DIM, LSH_TABLES, LSH_PLANES
     w = plane_matrix_int(dim, num_tables, num_planes)
     rows = ",\n                ".join(
         f"({tp}, [{', '.join(str(int(w[d, tp])) for d in range(dim))}])"

@@ -665,7 +665,7 @@ register(
 # ------------------------- multivariate OLS via one sufficient-stat pass
 
 
-def _sql_ols_final(n_expr: str = "nn") -> dict[str, str]:
+def _sql_ols_final() -> dict[str, str]:
     """Shared final-math SQL snippets for the normal-equation solve.
 
     The SAME text is executed by Spark (``selectExpr``) and DuckDB
@@ -675,9 +675,9 @@ def _sql_ols_final(n_expr: str = "nn") -> dict[str, str]:
     # det of [[n,sx1,sx2],[sx1,s11,s12],[sx2,s12,s22]] by first-row
     # cofactors; the three det_k replace column k with (sy,s1y,s2y).
     det = (
-        f"({n_expr} * (s11 * s22 - s12 * s12)"
-        f" - sx1 * (sx1 * s22 - s12 * sx2)"
-        f" + sx2 * (sx1 * s12 - s11 * sx2))"
+        "(nn * (s11 * s22 - s12 * s12)"
+        " - sx1 * (sx1 * s22 - s12 * sx2)"
+        " + sx2 * (sx1 * s12 - s11 * sx2))"
     )
     det0 = (
         "(sy * (s11 * s22 - s12 * s12)"
@@ -685,14 +685,14 @@ def _sql_ols_final(n_expr: str = "nn") -> dict[str, str]:
         " + sx2 * (s1y * s12 - s11 * s2y))"
     )
     det1 = (
-        f"({n_expr} * (s1y * s22 - s12 * s2y)"
-        f" - sy * (sx1 * s22 - s12 * sx2)"
-        f" + sx2 * (sx1 * s2y - s1y * sx2))"
+        "(nn * (s1y * s22 - s12 * s2y)"
+        " - sy * (sx1 * s22 - s12 * sx2)"
+        " + sx2 * (sx1 * s2y - s1y * sx2))"
     )
     det2 = (
-        f"({n_expr} * (s11 * s2y - s1y * s12)"
-        f" - sx1 * (sx1 * s2y - s1y * sx2)"
-        f" + sy * (sx1 * s12 - s11 * sx2))"
+        "(nn * (s11 * s2y - s1y * s12)"
+        " - sx1 * (sx1 * s2y - s1y * sx2)"
+        " + sy * (sx1 * s12 - s11 * sx2))"
     )
     # nullif: a singular design (collinear or constant regressors —
     # e.g. every row the same quantity AND discount) has det = 0; the
@@ -790,16 +790,15 @@ def _linear_model_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stats_signed_round(c, scale: int = 6):
-    """sign(x)*floor(|x|*10^s + 0.5)/10^s — the signed twin of
+def _stats_signed_round(c):
+    """sign(x)*floor(|x|*10^6 + 0.5)/10^6 — the signed twin of
     ``functions.stable.stable_round`` (coefficients can be negative)."""
-    f = float(10**scale)
+    f = 1e6
     return F.signum(c) * (F.floor(F.abs(c) * f + F.lit(0.5)) / f)
 
 
-def _sql_stats_signed_round(expr: str, scale: int = 6) -> str:
-    f = 10**scale
-    return f"sign({expr}) * (floor(abs({expr}) * {f}.0 + 0.5) / {f}.0)"
+def _sql_stats_signed_round(expr: str) -> str:
+    return f"sign({expr}) * (floor(abs({expr}) * 1000000.0 + 0.5) / 1000000.0)"
 
 
 def _ols_oracle() -> str:

@@ -631,6 +631,10 @@ register(
 
 # ------------------------------------------- MinHash-LSH + SimHash (scale)
 
+# Jaccard threshold the MinHash gate queries (full and incremental) and
+# their DuckDB mirrors run at.
+MINHASH_THRESHOLD = 0.3
+
 
 def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path near-dup: MinHash signatures + LSH band join
@@ -647,13 +651,12 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature aggregate so no extra exchange appears.
     docs = spread_scan(_docs(spark, sf_dir), spark, "doc_id")
     return minhash_lsh_pairs(
-        docs, "doc_id", F.col("text"), threshold=0.3, family="md5perm"
+        docs, "doc_id", F.col("text"), threshold=MINHASH_THRESHOLD,
+        family="md5perm",
     )
 
 
-def _minhash_oracle(
-    threshold: float = 0.3, k: int = 32, bands: int | None = None
-) -> str:
+def _minhash_oracle() -> str:
     """DuckDB mirror of the md5perm MinHash-LSH pipeline, generated so
     the 32 permutation constants / 8 band predicates stay in lockstep
     with the Spark constants (imported, not re-derived). Band collision
@@ -667,11 +670,12 @@ def _minhash_oracle(
     the sf1.0 decade soak whose word-shuffled sibling docs populate
     the 0.3-0.5 Jaccard gray zone where candidacy depends on the
     banding)."""
-    from ..functions.dedup import MH_PERM_P, mh_perm_constants, pick_bands_rows
+    from ..functions.dedup import (
+        DEFAULT_NUM_HASHES, MH_PERM_P, mh_perm_constants, pick_bands_rows,
+    )
 
-    if bands is None:
-        bands, _ = pick_bands_rows(threshold, k)
-    r = k // bands
+    threshold, k = MINHASH_THRESHOLD, DEFAULT_NUM_HASHES
+    bands, r = pick_bands_rows(threshold, k)
     a_c, b_c = mh_perm_constants(k)
     # 32-bit base hash from the md5 hex prefix, nibble-by-nibble
     # (== int(md5(shingle)[:8], 16), matching Spark's conv()).
@@ -769,25 +773,24 @@ def _minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(src_num >= INCR_BATCH_MIN_SRC),
         "doc_id",
         F.col("text"),
-        threshold=0.3,
+        threshold=MINHASH_THRESHOLD,
         family="md5perm",
     )
 
 
-def _minhash_incr_oracle(
-    threshold: float = 0.3, k: int = 32, bands: int | None = None
-) -> str:
+def _minhash_incr_oracle() -> str:
     """DuckDB mirror of the incremental md5perm MinHash probe: same
     signature pipeline as ``_minhash_oracle``, but the join is
     corpus-side × batch-side (disjoint by the source split), with band
     collision again expressed as slice equality. Bands derive from the
     threshold exactly like the engine side (see ``_minhash_oracle``'s
     r9 note)."""
-    from ..functions.dedup import MH_PERM_P, mh_perm_constants, pick_bands_rows
+    from ..functions.dedup import (
+        DEFAULT_NUM_HASHES, MH_PERM_P, mh_perm_constants, pick_bands_rows,
+    )
 
-    if bands is None:
-        bands, _ = pick_bands_rows(threshold, k)
-    r = k // bands
+    threshold, k = MINHASH_THRESHOLD, DEFAULT_NUM_HASHES
+    bands, r = pick_bands_rows(threshold, k)
     a_c, b_c = mh_perm_constants(k)
     base = " + ".join(
         f"(strpos('0123456789abcdef', substr(md5(shingle), {i + 1}, 1)) - 1)"
@@ -860,6 +863,12 @@ register(
 )
 
 
+# Hamming threshold and fingerprint width of the SimHash gate query and
+# its DuckDB mirror (60 bits: 15 md5 hex chars fit a signed long).
+SIMHASH_MAX_HAMMING = 3
+SIMHASH_BITS = 60
+
+
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path near-dup #2: SimHash with banded Hamming join
     (functions.dedup.simhash_pairs). The gate runs the md5hex family at
@@ -878,18 +887,21 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", X.tokens(F.col("text")).alias("toks")),
         "doc_id",
         F.col("toks"),
-        max_hamming=3,
-        num_bits=60,
+        max_hamming=SIMHASH_MAX_HAMMING,
+        num_bits=SIMHASH_BITS,
         family="md5hex",
     )
 
 
-def _simhash_oracle(max_hamming: int = 3, bands: int = 4, bits: int = 60) -> str:
+def _simhash_oracle() -> str:
     """DuckDB mirror of the md5hex SimHash pipeline. The 60-bit token
     hash is rebuilt from md5 hex nibbles (strpos over '0123456789abcdef'
     == int(h[:15], 16)); votes, fingerprint assembly, band keys and
     bit_count(xor) Hamming are then plain integer arithmetic that both
     engines evaluate identically."""
+    from ..functions.dedup import SIMHASH_BANDS
+
+    max_hamming, bands, bits = SIMHASH_MAX_HAMMING, SIMHASH_BANDS, SIMHASH_BITS
     width = bits // bands
     mask = (1 << width) - 1
     val = " + ".join(
@@ -997,7 +1009,7 @@ register(
 # ESTIMATE at 0.3); recall is measured against exact pairs at the same
 # point, so the number reflects both banding misses and estimator
 # variance — what a user tuning bands/rows actually needs to watch.
-MINHASH_RECALL_TAU = 0.3
+MINHASH_RECALL_TAU = MINHASH_THRESHOLD
 
 
 def _minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

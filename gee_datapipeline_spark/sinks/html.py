@@ -87,10 +87,10 @@ def render_wrapper_from_spine(
     title: str,
     spine,
     frame_pattern: str,
-    date_col: str = "date",
 ) -> str:
     """S10 directly from the A9 date-spine RELATION: ``spine`` is a
-    DataFrame (e.g. ``operators.calendar.date_spine_from``'s output or
+    DataFrame with a ``date`` column (e.g.
+    ``operators.calendar.date_spine_from``'s output or
     the observed side of ``date_spine_gaps``) and the slider's date
     list is provably that query's result — not a caller-assembled
     Python list that can drift from it. The collect is bounded by the
@@ -101,7 +101,7 @@ def render_wrapper_from_spine(
     dates = [
         r["d"]
         for r in spine.select(
-            F.col(date_col).cast("string").alias("d")
+            F.col("date").cast("string").alias("d")
         ).distinct().collect()
     ]
     return render_wrapper(title, dates, frame_pattern)

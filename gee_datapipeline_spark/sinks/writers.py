@@ -25,21 +25,10 @@ from pyspark.sql import functions as F
 MAX_IMAGE_PIXELS = 2_000_000
 
 
-def write_pixels(df: DataFrame, path: str, spatial_sort: bool = False) -> None:
+def write_pixels(df: DataFrame, path: str) -> None:
     """S6 — the canonical partitioned store (zstd parquet, overwritten
     on re-export). Partition pruning on (dataset, date) makes P1/P4
-    filters metadata-only at read time.
-
-    ``spatial_sort=True`` Z-orders rows within each output partition so
-    parquet row-group min/max stats on (x, y) prune bbox queries inside
-    a partition too — the intra-partition analog of partition pruning."""
-    if spatial_sort:
-        from ..functions.geo import z_order_key
-        from pyspark.sql import functions as F2
-
-        df = df.withColumn(
-            "__z", z_order_key(F2.col("x"), F2.col("y"))
-        ).sortWithinPartitions("__z").drop("__z")
+    filters metadata-only at read time."""
     (
         df.write.mode("overwrite")
         .option("compression", "zstd")
@@ -63,12 +52,11 @@ def write_geotiffs(
     df: DataFrame,
     out_dir: str,
     cell_deg: float,
-    value_col: str = "value",
     compress: str | None = None,
     tile: int | None = None,
 ) -> DataFrame:
-    """S6 (full form) — one real GeoTIFF file per (dataset, date)
-    raster, the reference's actual export artifact
+    """S6 (full form) — one real GeoTIFF file of ``value`` per
+    (dataset, date) raster, the reference's actual export artifact
     (``geemap.ee_export_image`` → ``exported_data/viirs_frp_*.tif``,
     DataDownloader_SNPP_VIIRS_V1.py:174-180, discovered back by the
     S5 glob). Encoding uses the in-repo pure-Python GeoTIFF codec
@@ -116,7 +104,7 @@ def write_geotiffs(
                 f"{MAX_IMAGE_PIXELS}-pixel image-sink guard"
             )
         vals = np.full((h, w), np.nan)
-        vals[ys, xs] = pdf[value_col].to_numpy(dtype="float64")
+        vals[ys, xs] = pdf["value"].to_numpy(dtype="float64")
         # lon/lat are pixel CENTERS (read_rasters convention,
         # rasterio.transform.xy style): origin = center − (x + ½)·cell
         lon = pdf["lon"].to_numpy()
@@ -153,16 +141,14 @@ def write_geotiffs_multiband(
     df: DataFrame,
     out_dir: str,
     cell_deg: float,
-    band_col: str = "band",
-    value_col: str = "value",
     compress: str | None = None,
     tile: int | None = None,
 ) -> DataFrame:
-    """S6, multi-band form — one GeoTIFF per ``date`` with ALL bands
-    stacked as SamplesPerPixel (chunky interleave): the artifact
+    """S6, multi-band form — one GeoTIFF of ``value`` per ``date`` with
+    ALL bands stacked as SamplesPerPixel (chunky interleave): the artifact
     ``geemap.ee_export_image(..., file_per_band=False)`` produces when
     several bands survive the select (DataDownloader_V1.py:149 option
-    surface). Band index = rank of the ``band_col`` value in sorted
+    surface). Band index = rank of the ``band`` value in sorted
     order within the file; the manifest records the ordered band list
     so the mapping is queryable.
 
@@ -180,7 +166,7 @@ def write_geotiffs_multiband(
 
     def enc(pdf: "pd.DataFrame") -> "pd.DataFrame":
         date = str(pdf["date"].iloc[0])
-        bands = sorted(pdf[band_col].unique().tolist())
+        bands = sorted(pdf["band"].unique().tolist())
         xs = pdf["x"].to_numpy()
         ys = pdf["y"].to_numpy()
         w, h = int(xs.max()) + 1, int(ys.max()) + 1
@@ -191,8 +177,8 @@ def write_geotiffs_multiband(
             )
         cube = np.full((len(bands), h, w), np.nan)
         rank = {b: i for i, b in enumerate(bands)}
-        bi = pdf[band_col].map(rank).to_numpy()
-        cube[bi, ys, xs] = pdf[value_col].to_numpy(dtype="float64")
+        bi = pdf["band"].map(rank).to_numpy()
+        cube[bi, ys, xs] = pdf["value"].to_numpy(dtype="float64")
         lon = pdf["lon"].to_numpy()
         lat = pdf["lat"].to_numpy()
         min_lon = float(lon[0] - (xs[0] + 0.5) * cell_deg)

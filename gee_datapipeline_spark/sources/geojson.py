@@ -16,8 +16,7 @@ JSON in ``props['__coordinates']`` for exact-geometry consumers
 
 Scale note: ``wholetext`` reads one row per file — correct for
 dimension-sized vector files (the amenity tables are 12–5,130 features,
-SURVEY.md §0). Ingest of NDJSON feature streams (one feature per line)
-goes through ``read_geojson_lines`` which parallelizes normally.
+SURVEY.md §0).
 """
 
 from __future__ import annotations
@@ -84,15 +83,3 @@ def read_geojson(
     )
     return _flatten_features(feats, src)
 
-
-def read_geojson_lines(
-    spark: SparkSession, path: str, source: str | None = None
-) -> DataFrame:
-    """NDJSON variant: one Feature per line (the scalable layout for
-    large vector datasets — line-splittable, parallel scan)."""
-    src = source or os.path.splitext(os.path.basename(path))[0].lower()
-    raw = spark.read.text(path)
-    feats = raw.filter(F.length(F.trim("value")) > 0).select(
-        F.parse_json("value").alias("f")
-    )
-    return _flatten_features(feats, src)

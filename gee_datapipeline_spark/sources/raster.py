@@ -7,12 +7,10 @@ Here the same ingest is a Spark job: ``binaryFile`` source → per-file
 decode inside ``mapInPandas`` (UDTF-shaped: one input row fans out to
 height×width pixel rows) → the long pixel table.
 
-Decode is REAL and dependency-free: the default decoder sniffs the
-payload magic and dispatches to the in-repo pure-Python GeoTIFF codec
-(``sources.tiffcodec`` — uncompressed strips, the shape the reference's
-own exports take) or to the FAKETIF test format. A custom ``decode``
-callable can still be injected (e.g. a rasterio-backed one where that
-library exists, for compressed/tiled TIFFs).
+Decode is REAL and dependency-free: every file goes through the in-repo
+pure-Python GeoTIFF codec (``sources.tiffcodec`` — strips or tiles,
+uncompressed or DEFLATE, the shapes GEE exports take); a payload without
+the TIFF byte-order magic is rejected.
 
 Scale: one task per file; files are the parallelism unit (steady state
 reads the Parquet pixel store, this path is ingest/backfill only).
@@ -20,8 +18,7 @@ reads the Parquet pixel store, this path is ingest/backfill only).
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,49 +29,18 @@ PIXEL_ROWS_SCHEMA = (
     "lon double, lat double, value double"
 )
 
-# FAKETIF layout: magic(7s) | width(i) | height(i) | min_lon(d) | min_lat(d)
-# | cell_deg(d) | float64 values row-major (NaN = nodata)
-_FAKE_MAGIC = b"FAKETIF"
-_HDR = struct.Struct("<7sii3d")
+
+def _decode_raster(payload: bytes):
+    """GeoTIFF bytes (II*/MM*) → (values, min_x, min_y, cell, crs) via
+    the pure-Python codec; any other payload is rejected."""
+    if payload[:2] not in (b"II", b"MM"):
+        raise ValueError("unknown raster format (magic not TIFF)")
+    from .tiffcodec import decode_geotiff
+
+    return decode_geotiff(payload)
 
 
-def encode_fake_raster(
-    values: np.ndarray, min_lon: float, min_lat: float, cell_deg: float
-) -> bytes:
-    h, w = values.shape
-    return _HDR.pack(_FAKE_MAGIC, w, h, min_lon, min_lat, cell_deg) + (
-        values.astype("<f8").tobytes()
-    )
-
-
-def fake_raster_decoder(payload: bytes):
-    """bytes → (values 2-D array, min_lon, min_lat, cell_deg,
-    crs) — FAKETIF carries no CRS tag, so always EPSG:4326."""
-    magic, w, h, min_lon, min_lat, cell = _HDR.unpack_from(payload)
-    if magic != _FAKE_MAGIC:
-        raise ValueError("not a FAKETIF payload")
-    vals = np.frombuffer(payload, dtype="<f8", offset=_HDR.size).reshape(h, w)
-    return vals, min_lon, min_lat, cell, "EPSG:4326"
-
-
-def default_raster_decoder(payload: bytes):
-    """Magic-sniffing decode: real GeoTIFF (II*/MM*) via the pure-Python
-    codec, FAKETIF for plumbing tests. bytes → (values, min_x, min_y,
-    cell, crs)."""
-    if payload[:2] in (b"II", b"MM"):
-        from .tiffcodec import decode_geotiff
-
-        return decode_geotiff(payload)
-    if payload[: len(_FAKE_MAGIC)] == _FAKE_MAGIC:
-        return fake_raster_decoder(payload)
-    raise ValueError("unknown raster format (magic not TIFF/FAKETIF)")
-
-
-def read_rasters(
-    spark: SparkSession,
-    path_glob: str,
-    decode: Callable | None = None,
-) -> DataFrame:
+def read_rasters(spark: SparkSession, path_glob: str) -> DataFrame:
     """Scan raster files (S5 file-glob discovery is free via the path
     glob) and unpivot each to pixel rows."""
     # A leaf-level glob goes through pathGlobFilter on the parent dir:
@@ -92,22 +58,21 @@ def read_rasters(
     else:
         files = reader.load(path_glob)
 
-    if decode is None:
-        decode = default_raster_decoder
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.crs import to_lonlat_fn
 
         for pdf in batches:
             for _, r in pdf.iterrows():
-                vals, min_x, min_y, cell, crs = decode(bytes(r["content"]))
-                # single-band decoders return (h, w); multi-band
+                vals, min_x, min_y, cell, crs = _decode_raster(
+                    bytes(r["content"])
+                )
+                # single-band files decode to (h, w); multi-band
                 # (SamplesPerPixel > 1, the file_per_band=False export
                 # shape) returns (bands, h, w) — normalize to a cube
                 cube = vals[np.newaxis] if vals.ndim == 2 else vals
                 nb, h, w = cube.shape
                 ys, xs = np.mgrid[0:h, 0:w]
-                # anisotropic decoders hand back (sx, sy); square grids
+                # anisotropic grids decode to (sx, sy); square grids
                 # keep the scalar contract
                 sx, sy = (
                     cell if isinstance(cell, (tuple, list)) else (cell, cell)

@@ -82,16 +82,9 @@ def pixels_rows(
 
 
 def make_pixels(
-    spark: SparkSession,
-    months: int = 3,
-    grid: int = 12,
-    datasets: tuple[str, ...] = ("no2", "co"),
-    seed: int = 42,
-    null_frac: float = 0.05,
+    spark: SparkSession, months: int = 3, grid: int = 12
 ) -> DataFrame:
-    return spark.createDataFrame(
-        pixels_rows(months, grid, datasets, seed, null_frac), PIXELS_SCHEMA
-    )
+    return spark.createDataFrame(pixels_rows(months, grid), PIXELS_SCHEMA)
 
 
 def regions_rows() -> list[tuple]:
@@ -169,10 +162,10 @@ def amenities_rows(n: int = 25, seed: int = 7) -> list[tuple]:
     ]
 
 
-def make_amenities(spark: SparkSession, n: int = 25, seed: int = 7) -> DataFrame:
+def make_amenities(spark: SparkSession, n: int = 25) -> DataFrame:
     from ..model import FEATURES_SCHEMA
 
-    return spark.createDataFrame(amenities_rows(n, seed), FEATURES_SCHEMA)
+    return spark.createDataFrame(amenities_rows(n), FEATURES_SCHEMA)
 
 
 def roads_rows(

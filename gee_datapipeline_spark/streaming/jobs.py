@@ -192,13 +192,10 @@ def run_to_memory(
     )
 
 
-def dedup_stream(
-    stream: DataFrame,
-    keys: tuple[str, ...] = ("ts", "cell_x", "value"),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming deduplication: drop repeats of the same key within the
-    watermark horizon (``dropDuplicatesWithinWatermark``).
+def dedup_stream(stream: DataFrame) -> DataFrame:
+    """Streaming deduplication: drop repeats of the same
+    ``(ts, cell_x, value)`` key within a 2-hour watermark horizon
+    (``dropDuplicatesWithinWatermark``).
 
     The state store holds one entry per key only until the watermark
     passes it — bounded by (event rate × horizon), never by stream
@@ -206,8 +203,8 @@ def dedup_stream(
     unbounded 100 TB/day feed. Exact duplicates from at-least-once
     sources (replayed files, Kafka redelivery) are the target; the
     batch equivalent is plain DISTINCT over the same window."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        list(keys)
+    return stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
+        ["ts", "cell_x", "value"]
     )
 
 
@@ -215,13 +212,12 @@ def correlate_streams(
     left: DataFrame,
     right: DataFrame,
     key: str = "user_id",
-    horizon: str = "10 minutes",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join: correlate two live event feeds on a
     shared key within a bounded event-time horizon (right event lands in
-    [left.ts, left.ts + horizon]) — the click-to-error correlation the
+    [left.ts, left.ts + 10 minutes]; both sides carry a 2-hour
+    watermark) — the click-to-error correlation the
     reference resolves offline (J4's as-of cousin), done at ingest.
 
     Both sides are watermarked and the join condition carries the time
@@ -243,17 +239,17 @@ def correlate_streams(
         F.col("ts").alias("l_ts"),
         F.col(key).alias("l_key"),
         F.col("value").alias("l_value"),
-    ).withWatermark("l_ts", watermark)
+    ).withWatermark("l_ts", "2 hours")
     rp = right.select(
         F.col("ts").alias("r_ts"),
         F.col(key).alias("r_key"),
         F.col("value").alias("r_value"),
-    ).withWatermark("r_ts", watermark)
+    ).withWatermark("r_ts", "2 hours")
     return lp.join(
         rp,
         (F.col("l_key") == F.col("r_key"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"interval {horizon}")),
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("interval 10 minutes")),
         how,
     )
 

@@ -240,6 +240,41 @@ def test_package_annotations_resolve():
     assert not unresolved, "\n".join(unresolved)
 
 
+# Defaulted parameters across the package: each is a value a caller may
+# set, so each is a configuration a reader has to reason about.
+PACKAGE_DEFAULTED_PARAMS = 167
+
+
+def test_package_defaulted_param_count():
+    """Pins the package's settable values the way ``ALLOWED_ENV_READS``
+    pins its env reads: positional defaults plus keyword-only defaults
+    over every ``def`` under ``gee_datapipeline_spark/``. A change that
+    adds or removes one updates ``PACKAGE_DEFAULTED_PARAMS`` and says
+    why in CHANGES.md."""
+    import ast
+    import os
+
+    import gee_datapipeline_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    n = 0
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            p = os.path.join(dirpath, f)
+            with open(p, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), filename=p)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef):
+                    n += len(node.args.defaults)
+                    n += sum(d is not None for d in node.args.kw_defaults)
+    assert n == PACKAGE_DEFAULTED_PARAMS, (
+        f"package has {n} defaulted parameters, "
+        f"PACKAGE_DEFAULTED_PARAMS says {PACKAGE_DEFAULTED_PARAMS}"
+    )
+
+
 @pytest.mark.parametrize("name", gate_reference_queries(LINTABLE))
 def test_plan_lint(name, spark):
     df = QUERIES[name].spark(spark, SF_SMOKE)

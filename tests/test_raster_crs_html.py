@@ -11,11 +11,8 @@ from pyspark.sql import functions as F
 
 from gee_datapipeline_spark.functions.crs import make_crs_transform_udf
 from gee_datapipeline_spark.sinks.html import render_layer_map, render_wrapper
-from gee_datapipeline_spark.sources.raster import (
-    encode_fake_raster,
-    fake_raster_decoder,
-    read_rasters,
-)
+from gee_datapipeline_spark.sources.raster import read_rasters
+from gee_datapipeline_spark.sources.tiffcodec import encode_geotiff
 
 
 @pytest.fixture(scope="module")
@@ -24,10 +21,10 @@ def raster_dir(tmp_path_factory):
     vals1 = np.array([[1.0, 2.0], [3.0, np.nan]])
     vals2 = np.array([[10.0, 20.0], [30.0, 40.0]])
     (d / "no2_2025-01-01.tif").write_bytes(
-        encode_fake_raster(vals1, 77.0, 28.0, 0.01)
+        encode_geotiff(vals1, 77.0, 28.0, 0.01)
     )
     (d / "no2_2025-02-01.tif").write_bytes(
-        encode_fake_raster(vals2, 77.0, 28.0, 0.01)
+        encode_geotiff(vals2, 77.0, 28.0, 0.01)
     )
     return str(d)
 
@@ -35,7 +32,7 @@ def raster_dir(tmp_path_factory):
 def test_read_rasters_unpivots(spark, raster_dir):
     """S3 — two files → 8 pixel rows; NaN became NULL; pixel centers
     offset by half a cell (fix_transparency.py:68)."""
-    px = read_rasters(spark, raster_dir + "/*.tif", decode=fake_raster_decoder)
+    px = read_rasters(spark, raster_dir + "/*.tif")
     rows = px.collect()
     assert len(rows) == 8
     jan = [r for r in rows if "2025-01-01" in r.path]
@@ -48,9 +45,7 @@ def test_read_rasters_unpivots(spark, raster_dir):
 
 def test_read_rasters_glob_pruning(spark, raster_dir):
     """S5 — filename-glob partition discovery."""
-    only_jan = read_rasters(
-        spark, raster_dir + "/no2_2025-01*.tif", decode=fake_raster_decoder
-    )
+    only_jan = read_rasters(spark, raster_dir + "/no2_2025-01*.tif")
     assert only_jan.count() == 4
 
 

@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 from gee_datapipeline_spark.functions.geo import z_order_key
 
 from conftest import SF_SMOKE
-from gee_datapipeline_spark.sinks.writers import write_pixels
-from gee_datapipeline_spark.sources.synthetic import make_pixels
 
 
 def test_z_order_key_locality(spark):
@@ -33,18 +31,6 @@ def test_z_order_key_locality(spark):
         (2, 2): 0b1100,
         (3, 3): 0b1111,
     }
-
-
-def test_write_pixels_spatial_sort_roundtrip(spark, tmp_path):
-    """Z-ordered store returns identical data (sort is layout-only)."""
-    px = make_pixels(spark, months=1, grid=6)
-    out = str(tmp_path / "zstore")
-    write_pixels(px, out, spatial_sort=True)
-    back = spark.read.parquet(out)
-    assert back.count() == px.count()
-    a = {tuple(r) for r in px.select("dataset", "x", "y", "value").collect()}
-    b = {tuple(r) for r in back.select("dataset", "x", "y", "value").collect()}
-    assert a == b
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):

@@ -13,7 +13,6 @@ from gee_datapipeline_spark.functions.dedup import (
     minhash_lsh_pairs,
     minhash_signatures_df,
     signature_agreement,
-    simhash64,
     simhash_pairs,
 )
 
@@ -99,15 +98,6 @@ def test_minhash_lsh_finds_near_dups(spark, near_dup_docs):
     assert (0, 1) in found
     assert (2, 3) in found
     assert all(p in {(0, 1), (2, 3)} for p in found), found
-
-
-def test_simhash_identical_docs_distance_zero(spark):
-    df = spark.createDataFrame(
-        [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta")],
-        ["doc_id", "text"],
-    ).select("doc_id", simhash64(X.tokens(F.col("text"))).alias("fp"))
-    fps = {r.doc_id: r.fp for r in df.collect()}
-    assert fps[0] == fps[1]
 
 
 def test_simhash_pairs_blocking(spark, near_dup_docs):
